@@ -6,7 +6,7 @@ import scala.collection.mutable
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.{BroadcastExchangeLike, ShuffleExchangeLike}
 import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec}
@@ -45,20 +45,29 @@ object PlanBudget {
       sh > b.sh || bc > b.bc || cp > b.cp || nl > b.nl
   }
 
-  /** Every physical node reachable from `root`: descends through the AQE
-    * wrapper (pre-execution `executedPlan` = the initial plan, exchanges
-    * already inserted by EnsureRequirements), into cached-relation plans
-    * (each distinct relation expanded once — a twice-scanned persist is
-    * one plan, not two), and into subquery plans (scalar subqueries, DPP
-    * filters).
+  /** Every physical node reachable from `root` — the one executed-plan
+    * walker. Descends through the AQE wrapper (pre-execution
+    * `executedPlan` = the initial plan, exchanges already inserted by
+    * EnsureRequirements; after execution, the final plan), through the
+    * query stages of a final plan (a `QueryStageExec` is a leaf to plain
+    * TreeNode traversal), into cached-relation plans (each distinct
+    * relation expanded once — a twice-scanned persist is one plan, not
+    * two), and into subquery plans (scalar subqueries, DPP filters).
+    *
+    * `throughStages = false` keeps stages as leaves. [[count]] needs
+    * that: a builder that persists and counts a frame leaves a MATERIALIZED
+    * cached plan whose exchanges sit inside stages, and the checked-in
+    * budget was recorded without them.
     */
-  def allNodes(root: SparkPlan): Seq[SparkPlan] = {
+  def allNodes(root: SparkPlan, throughStages: Boolean = true)
+      : Seq[SparkPlan] = {
     val seenCaches = new java.util.IdentityHashMap[AnyRef, AnyRef]()
     val out = mutable.ArrayBuffer.empty[SparkPlan]
     def walk(p: SparkPlan): Unit = p.foreach { n =>
       out += n
       n match {
         case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
+        case q: QueryStageExec if throughStages => walk(q.plan)
         case m: InMemoryTableScanExec
             if seenCaches.put(m.relation, m.relation) == null =>
           walk(m.relation.cachedPlan)
@@ -71,7 +80,7 @@ object PlanBudget {
   }
 
   def count(root: SparkPlan): Counts = {
-    val ns = allNodes(root)
+    val ns = allNodes(root, throughStages = false)
     Counts(
       ns.count { case _: ShuffleExchangeLike => true; case _ => false },
       ns.count { case _: BroadcastExchangeLike => true; case _ => false },

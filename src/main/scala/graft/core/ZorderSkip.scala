@@ -4,8 +4,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
 /** Read-side payoff measurement for the Z-order layout (r10 verdict
@@ -141,18 +140,9 @@ object ZorderSkip {
       .filter(col("x").between(xLo, xHi) && col("y").between(yLo, yHi))
       .select(col("x"))
     val matching = df.collect().length.toLong
-    val scans = fileScans(df.queryExecution.executedPlan)
+    val scans = graft.PlanBudget.allNodes(df.queryExecution.executedPlan)
+      .collect { case s: FileSourceScanExec => s }
     require(scans.nonEmpty, "parquet scan not found in executed plan")
     (scans.map(_.metrics("numOutputRows").value).sum, matching)
   }
-
-  /** FileSourceScanExec nodes, descending through the AQE wrappers plain
-    * TreeNode traversal treats as leaves. */
-  def fileScans(p: SparkPlan)
-      : Seq[org.apache.spark.sql.execution.FileSourceScanExec] =
-    p.collect {
-      case s: org.apache.spark.sql.execution.FileSourceScanExec => Seq(s)
-      case a: AdaptiveSparkPlanExec => fileScans(a.executedPlan)
-      case q: QueryStageExec => fileScans(q.plan)
-    }.flatten
 }

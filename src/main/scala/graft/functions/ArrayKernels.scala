@@ -7,26 +7,51 @@ import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** The dedup family's hot hash kernels as native Catalyst expressions.
+/** The dedup family's hot hash and similarity kernels as native Catalyst
+  * expressions, and the one home of the md5-to-60-bit hash they share.
   *
-  * The UDF forms (VectorOps wrapped in `udf(...)`) pay a per-row
-  * `ArrayData → Seq[String]` conversion — one boxed String allocation per
-  * token — before the kernel even starts, plus the inverse conversion on
-  * array results. These expressions consume `ArrayData`/`UTF8String`
-  * directly (md5 over the UTF-8 bytes is identical either way, so values
-  * are bit-for-bit the same as the UDF path and the DuckDB oracles), and
-  * `doGenCode` keeps them inside whole-stage codegen.
+  * Spark's higher-order array functions (`transform`/`aggregate` lambdas)
+  * run interpreted, and a UDF pays a per-row `ArrayData → Seq` conversion
+  * (one boxed allocation per element) before the kernel even starts.
+  * These expressions consume `ArrayData`/`UTF8String` directly with
+  * primitive loops, and `doGenCode` keeps them inside whole-stage codegen.
+  * Every fold is sequential left-to-right, so results are bit-identical to
+  * the DuckDB oracles' SQL replications.
   */
 object ArrayKernelOps {
 
-  /** SimHash-32 over token md5s — ArrayData twin of
-    * [[VectorOps.simhash32]]. */
+  /** Per-thread reusable digest: `MessageDigest.getInstance` dominates the
+    * hash cost when called once per shingle (millions of times per task). */
+  private val md5Local = new ThreadLocal[java.security.MessageDigest] {
+    override def initialValue(): java.security.MessageDigest =
+      java.security.MessageDigest.getInstance("MD5")
+  }
+
+  /** First 60 bits of md5 as a non-negative long — the compiled form of
+    * the SQL `CAST(concat('0x', substr(md5(x),1,15)) AS BIGINT)` (and of
+    * `QueryBase.h64`). Takes raw UTF-8 bytes: `UTF8String.getBytes` and
+    * `String.getBytes("UTF-8")` produce the identical encoding, so every
+    * caller hashes bit-for-bit the same values as the SQL oracle. */
+  def md5LongBytes(bytes: Array[Byte]): Long = {
+    val md = md5Local.get()
+    md.reset()
+    val d = md.digest(bytes)
+    // first 15 hex chars = 7.5 bytes: take 8 bytes big-endian, drop low nibble
+    var v = 0L
+    var i = 0
+    while (i < 8) { v = (v << 8) | (d(i) & 0xffL); i += 1 }
+    v >>> 4
+  }
+
+  /** SimHash-32 over token md5s: bit j of the signature is the sign of the
+    * balance of bit j across all token hashes (near-identical token sets →
+    * identical signature). One md5 per token. */
   def simhash32(arr: ArrayData): Long = {
     val n = arr.numElements()
     val bal = new Array[Long](32)
     var i = 0
     while (i < n) {
-      val h = VectorOps.md5LongBytes(arr.getUTF8String(i).getBytes)
+      val h = md5LongBytes(arr.getUTF8String(i).getBytes)
       var j = 0
       while (j < 32) {
         bal(j) += (((h >> j) & 1L) * 2L - 1L)
@@ -40,14 +65,17 @@ object ArrayKernelOps {
     sig
   }
 
-  /** MinHash signature — ArrayData twin of [[VectorOps.minhashSig]]. */
+  /** MinHash signature: seed j hashes shingle x as
+    * ((2j+1) * (md5(x) mod 2^28) + 7919 j) mod (2^31 - 1) — one md5 per
+    * shingle total; the per-seed family is overflow-free affine arithmetic
+    * reproducible in any SQL engine. An empty set signs as all -1. */
   def minhashSig(arr: ArrayData, nSeeds: Int): ArrayData = {
     val n = arr.numElements()
     if (n == 0) return new GenericArrayData(Array.fill(nSeeds)(-1L))
     val hs = new Array[Long](n)
     var i = 0
     while (i < n) {
-      hs(i) = VectorOps.md5LongBytes(arr.getUTF8String(i).getBytes) %
+      hs(i) = md5LongBytes(arr.getUTF8String(i).getBytes) %
         268435456L
       i += 1
     }
@@ -181,19 +209,25 @@ object ArrayKernelOps {
     new GenericArrayData(java.util.Arrays.copyOf(out, outN))
   }
 
-  /** Distinct char 3-grams (UTF-16 char windows, identical to
-    * [[VectorOps.charTrigrams]]). */
+  /** Distinct character 3-grams in first-occurrence order, over UTF-16
+    * char windows of the decoded string (compiled; the HOF-lambda substr
+    * loop is interpreted and ~50x slower at corpus scale). */
   def charTrigrams(s: UTF8String): ArrayData = {
-    val arr = VectorOps.charTrigrams(s.toString)
-    val out = new Array[AnyRef](arr.length)
+    val str = s.toString
+    val set = new java.util.LinkedHashSet[String]()
     var i = 0
-    while (i < arr.length) { out(i) = UTF8String.fromString(arr(i)); i += 1 }
+    while (i + 3 <= str.length) { set.add(str.substring(i, i + 3)); i += 1 }
+    val out = new Array[AnyRef](set.size)
+    val it = set.iterator()
+    i = 0
+    while (it.hasNext) { out(i) = UTF8String.fromString(it.next()); i += 1 }
     new GenericArrayData(out)
   }
 
-  /** Float-float cosine over ArrayData — `toFloatArray()` is a primitive
-    * copy (the UDF path boxed every element into Seq[Float]); fold order
-    * and in-loop double widening identical to [[VectorOps.cosineFF]]. */
+  /** Float-float cosine; dot and both norms are each folded left to
+    * right. Embeddings stay raw `array<float>` in the plan and each element
+    * widens to double inside the loop, which is exact, so the result is
+    * bit-identical to casting the whole array first. */
   def cosineFF(a: ArrayData, b: ArrayData): Double = {
     val x = a.toFloatArray(); val y = b.toFloatArray()
     val n = x.length
@@ -207,7 +241,8 @@ object ArrayKernelOps {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** Mixed float/double cosine — twin of [[VectorOps.cosineFD]]. */
+  /** Mixed float/double cosine (query vector vs double centroid), same
+    * fold order and widening as [[cosineFF]]. */
   def cosineFD(a: ArrayData, b: ArrayData): Double = {
     val x = a.toFloatArray(); val y = b.toDoubleArray()
     val n = x.length
@@ -221,15 +256,35 @@ object ArrayKernelOps {
     dot / (math.sqrt(na) * math.sqrt(nb))
   }
 
-  /** Banded hyperplane bucket keys — float ArrayData twin of
-    * [[VectorOps.bandKeysF]] (float→double widening is exact). */
+  /** Random-hyperplane coefficients, md5-derived (plane p, dim d →
+    * md5("p_d") % 2001 - 1000) — computed once per JVM, identical to the
+    * oracle's per-row SQL derivation. */
+  private lazy val planes: Array[Array[Double]] = Array.tabulate(32, 64) {
+    (p, d) => ((md5LongBytes(s"${p}_$d".getBytes("UTF-8")) % 2001L) -
+      1000L).toDouble
+  }
+
+  /** 8 banded 4-bit hyperplane bucket keys for a 64-dim float vector
+    * (float→double widening is exact). */
   def bandKeysF(a: ArrayData): ArrayData = {
     val x = a.toFloatArray()
-    val v = new Array[Double](x.length)
-    var i = 0
-    while (i < v.length) { v(i) = x(i).toDouble; i += 1 }
-    new GenericArrayData(VectorOps.bandKeys(
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(v)))
+    val out = new Array[Long](8)
+    var bd = 0
+    while (bd < 8) {
+      var key = 0L
+      var j = 0
+      while (j < 4) {
+        val plane = planes(bd * 4 + j)
+        var dot = 0.0
+        var d = 0
+        while (d < 64) { dot += x(d).toDouble * plane(d); d += 1 }
+        if (dot > 0) key |= (1L << j)
+        j += 1
+      }
+      out(bd) = key
+      bd += 1
+    }
+    new GenericArrayData(out)
   }
 
   /** Banded sign-LSH bucket keys over an INTEGER vector (the DbscanCC

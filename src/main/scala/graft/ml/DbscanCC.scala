@@ -38,19 +38,13 @@ import org.apache.spark.sql.functions._
   */
 object DbscanCC {
 
-  /** Driver-side twin of QueryBase.h64 for plan-build-time constants. */
-  private def md5Long(s: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
-  }
-
   /** Hyperplane coefficient for plane index `plane`, dimension `d`:
     * integer in [-1000, 1000], md5-derived so the oracle recomputes the
     * identical value in SQL (DbscanSql emits the duck face; the two MUST
     * change in lockstep). */
   def coef(salt: String, plane: Int, d: Int): Long =
-    md5Long(s"$salt${plane}_$d") % 2001 - 1000
+    graft.functions.ArrayKernelOps.md5LongBytes(
+      s"$salt${plane}_$d".getBytes("UTF-8")) % 2001 - 1000
 
   /** Connected components of the LSH-blocked eps-graph.
     *

@@ -172,6 +172,38 @@ object TopKStrategy extends Strategy {
   }
 }
 
+/** The per-partition grouped-heap build under both TopK execs: one
+  * bounded heap per key, holding that key's best `k` rows (copies) seen
+  * in this partition. Each heap is a max-heap on the ordering: its head is
+  * the WORST retained row, evicted when a better one arrives (for
+  * `orderBy(x.desc)`, "better" = larger x; LazilyGeneratedOrdering already
+  * encodes the direction, so worst = max under it). */
+private object GroupedTopK {
+  def heaps(rows: Iterator[InternalRow], keys: Seq[Expression],
+      order: Seq[SortOrder], k: Int, childOutput: Seq[Attribute])
+      : Iterator[scala.collection.mutable.PriorityQueue[InternalRow]] = {
+    val keyProj = UnsafeProjection.create(keys, childOutput)
+    val rowOrd = new LazilyGeneratedOrdering(order, childOutput)
+    val heaps = new java.util.HashMap[UnsafeRow,
+      scala.collection.mutable.PriorityQueue[InternalRow]]()
+    rows.foreach { row =>
+      val key = keyProj(row)
+      var heap = heaps.get(key)
+      if (heap == null) {
+        heap = scala.collection.mutable.PriorityQueue.empty(rowOrd)
+        heaps.put(key.copy(), heap)
+      }
+      if (heap.size < k) heap.enqueue(row.copy())
+      else if (rowOrd.compare(row, heap.head) < 0) {
+        heap.dequeue()
+        heap.enqueue(row.copy())
+      }
+    }
+    import scala.jdk.CollectionConverters._
+    heaps.values().iterator().asScala
+  }
+}
+
 case class TopKPerKeyExec(
     keys: Seq[Expression],
     order: Seq[SortOrder],
@@ -192,29 +224,8 @@ case class TopKPerKeyExec(
     val limit = k
     val childOutput = child.output
     child.execute().mapPartitions({ rows =>
-      val keyProj = UnsafeProjection.create(keyExprs, childOutput)
-      val rowOrd = new LazilyGeneratedOrdering(sortOrder, childOutput)
-      // Max-heap on the ordering: the heap head is the WORST retained
-      // row, evicted when a better one arrives (for `orderBy(x.desc)`,
-      // "better" = larger x; LazilyGeneratedOrdering already encodes
-      // the direction, so worst = max under it).
-      val heaps = new java.util.HashMap[UnsafeRow,
-        scala.collection.mutable.PriorityQueue[InternalRow]]()
-      rows.foreach { row =>
-        val key = keyProj(row)
-        var heap = heaps.get(key)
-        if (heap == null) {
-          heap = scala.collection.mutable.PriorityQueue.empty(rowOrd)
-          heaps.put(key.copy(), heap)
-        }
-        if (heap.size < limit) heap.enqueue(row.copy())
-        else if (rowOrd.compare(row, heap.head) < 0) {
-          heap.dequeue()
-          heap.enqueue(row.copy())
-        }
-      }
-      import scala.jdk.CollectionConverters._
-      heaps.values().iterator().asScala.flatMap(_.iterator)
+      GroupedTopK.heaps(rows, keyExprs, sortOrder, limit, childOutput)
+        .flatMap(_.iterator)
     }, preservesPartitioning = true)
   }
 
@@ -263,23 +274,8 @@ case class TopKPairsExec(
     val payloadExprs: Seq[Expression] = payload
     val xyOut = xy
     child.execute().mapPartitions({ rows =>
-      val keyProj = UnsafeProjection.create(keyExprs, childOutput)
-      val rowOrd = new LazilyGeneratedOrdering(sortOrder, childOutput)
-      val heaps = new java.util.HashMap[UnsafeRow,
-        scala.collection.mutable.PriorityQueue[InternalRow]]()
-      rows.foreach { row =>
-        val key = keyProj(row)
-        var heap = heaps.get(key)
-        if (heap == null) {
-          heap = scala.collection.mutable.PriorityQueue.empty(rowOrd)
-          heaps.put(key.copy(), heap)
-        }
-        if (heap.size < limit) heap.enqueue(row.copy())
-        else if (rowOrd.compare(row, heap.head) < 0) {
-          heap.dequeue()
-          heap.enqueue(row.copy())
-        }
-      }
+      val heaps =
+        GroupedTopK.heaps(rows, keyExprs, sortOrder, limit, childOutput)
       // Emission sorts each ≤k group ascending by the payload columns —
       // first payload column = the id the replaced join compared with
       // `<`, unique within a group — so pair (i, j) with i < j is
@@ -299,8 +295,7 @@ case class TopKPairsExec(
           xyOut.map(a => org.apache.spark.sql.types.StructField(
             a.name, a.dataType, a.nullable))))
       val joined = new org.apache.spark.sql.catalyst.expressions.JoinedRow
-      import scala.jdk.CollectionConverters._
-      heaps.values().iterator().asScala.flatMap { heap =>
+      heaps.flatMap { heap =>
         val arr = heap.toArray.sortWith((a, b) => emitOrd.compare(a, b) < 0)
           .map(r => payloadProj(r).copy())
         val n = arr.length

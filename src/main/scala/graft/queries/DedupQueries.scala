@@ -87,13 +87,6 @@ object DedupQueries extends QueryBase {
     graft.core.CacheLedger.track(out)
   }
 
-  /** Driver-side twin of [[h64]] for plan-build-time constants. */
-  private def md5Long(s: String): Long = {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val hex = md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    java.lang.Long.parseLong(hex.substring(0, 15), 16)
-  }
-
   /** Distinct word-3-shingles of lower(text) (shared with the ×100
     * stratified-slice twins in [[SliceQueries]] and the streaming
     * near-dup admission gate in [[graft.streaming.Incremental]]). */

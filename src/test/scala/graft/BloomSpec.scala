@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.{FilterExec, SparkPlan}
+import org.apache.spark.sql.execution.FilterExec
 import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec, ShuffledHashJoinExec, SortMergeJoinExec}
 import org.apache.spark.sql.functions._
 import graft.functions.{BloomContainsLong, BloomOps}
@@ -74,23 +74,13 @@ class BloomSpec extends SparkSpec {
   test("join_bloom_prune plans the probe on the scan side, below the join") {
     val plan = Catalog.byName("join_bloom_prune").spark(spark, dir)
       .queryExecution.executedPlan
-    def subtree(p: SparkPlan): Seq[SparkPlan] = {
-      val kids = p match {
-        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
-          Seq(a.executedPlan)
-        case qs: org.apache.spark.sql.execution.adaptive.QueryStageExec =>
-          Seq(qs.plan)
-        case other => other.children
-      }
-      p +: kids.flatMap(subtree)
-    }
-    val joins = subtree(plan).filter {
+    val joins = PlanBudget.allNodes(plan).filter {
       case _: BroadcastHashJoinExec | _: ShuffledHashJoinExec | _: SortMergeJoinExec => true
       case _ => false
     }
     assert(joins.nonEmpty, "expected an equi-join in the plan")
     // the bloom probe must live in a Filter strictly below the join
-    val probeFilters = joins.flatMap(_.children).flatMap(subtree).collect {
+    val probeFilters = joins.flatMap(_.children).flatMap(PlanBudget.allNodes(_)).collect {
       case f: FilterExec if f.condition.find(_.isInstanceOf[BloomContainsLong]).isDefined => f
     }
     assert(probeFilters.nonEmpty,

@@ -9,9 +9,9 @@ import graft.queries.Catalog
   * month partitions — otherwise the query demonstrates a join, not
   * pruning.
   *
-  * Scan collection reuses graft.core.ZorderSkip.fileScans — the one AQE
-  * descent in the repo — so a Spark-version fix to the wrapper traversal
-  * lands in both consumers at once.
+  * Scan collection filters `PlanBudget.allNodes` — the one executed-plan
+  * walker in the repo — so a Spark-version fix to the AQE wrapper
+  * traversal lands in every consumer at once.
   */
 class DppSpec extends SparkSpec {
 
@@ -40,9 +40,11 @@ class DppSpec extends SparkSpec {
       .count(_.getName.matches("order_month=\\d{4}-12"))
     assert(decMonths > 0 && decMonths < allMonths,
       s"fixture must have prunable layout ($decMonths of $allMonths)")
-    val scans = graft.core.ZorderSkip.fileScans(
-      df.queryExecution.executedPlan).filter(
-      _.relation.location.rootPaths.exists(_.toString.contains("dpp_fact_tbl")))
+    val scans = PlanBudget.allNodes(df.queryExecution.executedPlan).collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec
+          if s.relation.location.rootPaths.exists(
+            _.toString.contains("dpp_fact_tbl")) => s
+    }
     assert(scans.nonEmpty, "partitioned fact scan not found in final plan")
     val scan = scans.head
     assert(scan.toString.contains("dynamicpruning"),

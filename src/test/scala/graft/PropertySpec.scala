@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.Gen
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.{Tokenizer, TrigramOps}
 import graft.sources.{Html, Xpath}
@@ -12,12 +11,13 @@ import graft.sources.{Html, Xpath}
   * independently-written Jaccard model, and the HTML parser against a
   * serialize→parse structural roundtrip. Complements the
   * reference-derived vector specs (TokenizerSpec, TrigramSpec,
-  * HtmlXpathSpec) with invariants over the whole input space.
+  * HtmlXpathSpec) with invariants over the whole input space, and the
+  * one md5 kernel against its SQL form.
   *
   * Generators are ScalaCheck `Gen`s driven by a seeded in-house loop (the
   * scalatestplus bridge artifact is not in the offline cache) — 300 cases
   * per property, reproducible from the fixed seed. */
-class PropertySpec extends AnyFunSuite {
+class PropertySpec extends SparkSpec {
 
   private def forAll[A](g: Gen[A], n: Int = 300)(f: A => Unit): Unit = {
     val params = Gen.Parameters.default
@@ -267,6 +267,36 @@ class PropertySpec extends AnyFunSuite {
       assert(row.getInt(0) === g2.size, s"n_bigrams for $toks")
       assert(row.getInt(1) === g2.distinct.size, s"n_distinct for $toks")
       assert(row.getInt(2) === top, s"top_count for $toks")
+    }
+  }
+
+  // ------------------------------------------------------ md5-60 kernel
+
+  test("md5 kernel and DbscanCC.coef equal the SQL h64 form") {
+    import org.apache.spark.sql.functions.col
+    import spark.implicits._
+    val strGen = Gen.oneOf(Gen.const(""), Gen.alphaNumStr,
+      Gen.stringOfN(6, Gen.oneOf('ä', 'ö', 'ü', 'ß', 'Ä', 'e', '_')),
+      Gen.const("Mür-zu"), Gen.const("😀 x"))
+    val coefGen = Gen.zip(Gen.oneOf("", "s", "Mür"), Gen.choose(0, 63),
+      Gen.choose(0, 127))
+    val strs = scala.collection.mutable.ArrayBuffer.empty[String]
+    forAll(strGen)(strs += _)
+    val coefs = scala.collection.mutable.ArrayBuffer.empty[(String, Int, Int)]
+    forAll(coefGen)(coefs += _)
+    assert(strs.contains("") && strs.exists(_.exists("äöüßÄ".contains(_))))
+    val inputs = (strs ++ coefs.map { case (s, p, d) => s"$s${p}_$d" }).distinct
+    object Q extends graft.queries.QueryBase
+    val h64 = inputs.toSeq.toDF("s").select(col("s"), Q.h64(col("s")))
+      .as[(String, Long)].collect().toMap
+    assert(h64.size == inputs.size)
+    strs.foreach { s =>
+      assert(graft.functions.ArrayKernelOps.md5LongBytes(s.getBytes("UTF-8"))
+        === h64(s), s"md5LongBytes($s)")
+    }
+    coefs.foreach { case (salt, p, d) =>
+      assert(graft.ml.DbscanCC.coef(salt, p, d)
+        === h64(s"$salt${p}_$d") % 2001 - 1000, s"coef($salt, $p, $d)")
     }
   }
 }

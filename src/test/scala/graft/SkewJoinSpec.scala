@@ -1,7 +1,6 @@
 package graft
 
-import org.apache.spark.sql.execution.SparkPlan
-import org.apache.spark.sql.execution.adaptive.{AQEShuffleReadExec, AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.adaptive.AQEShuffleReadExec
 import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 
@@ -34,19 +33,6 @@ class SkewJoinSpec extends SparkSpec {
     assert(counts(1)._2 < counts.head._2 * 0.7, s"not Zipf-shaped: ${counts.toSeq}")
   }
 
-  /** Plan traversal that sees through AQE stage boundaries —
-    * `QueryStageExec` is a leaf to TreeNode.collect, so a plain collect
-    * never finds the join inside a materialized stage. */
-  private def deepCollect[T](p: SparkPlan)(
-      pf: PartialFunction[SparkPlan, T]): Seq[T] = {
-    val kids = p match {
-      case q: QueryStageExec => Seq(q.plan)
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case _ => p.children
-    }
-    pf.lift(p).toSeq ++ kids.flatMap(deepCollect(_)(pf))
-  }
-
   test("AQE OptimizeSkewedJoin splits the hot partition of the shuffle join") {
     val confs = Map(
       "spark.sql.adaptive.enabled" -> "true",
@@ -69,13 +55,16 @@ class SkewJoinSpec extends SparkSpec {
         .groupBy("grp").agg(count(lit(1)).as("n"))
       joined.collect() // execute so AQE finalizes the plan
       val root = joined.queryExecution.executedPlan
-      val smjs = deepCollect(root) { case j: SortMergeJoinExec => j }
+      // allNodes sees through AQE stage boundaries: `QueryStageExec` is a
+      // leaf to TreeNode.collect, so a plain collect never finds the join
+      // inside a materialized stage.
+      val smjs = PlanBudget.allNodes(root).collect { case j: SortMergeJoinExec => j }
       assert(smjs.nonEmpty, s"expected a sort-merge join in the final plan:\n$root")
       assert(smjs.exists(_.isSkewJoin),
         s"OptimizeSkewedJoin did not fire:\n$root")
       // The skew read must actually split the hot partition: the AQE
       // shuffle read on the fact side carries skewed-partition specs.
-      val reads = deepCollect(root) { case r: AQEShuffleReadExec => r }
+      val reads = PlanBudget.allNodes(root).collect { case r: AQEShuffleReadExec => r }
       assert(reads.exists(_.hasSkewedPartition),
         s"no AQEShuffleRead with skewed-partition splits:\n$root")
     } finally saved.foreach {
