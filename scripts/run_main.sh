@@ -21,6 +21,8 @@ done
 exec java $OPENS \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \
+  -Dfile.encoding=UTF-8 \
+  -Dspark.sql.codegen.cache.maxEntries=4096 \
   -Xms"$MEM" -Xmx"$MEM" -XX:+UseParallelGC \
   -XX:ReservedCodeCacheSize=512m -XX:+UseCodeCacheFlushing \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \

@@ -22,4 +22,5 @@ exec /opt/spark/bin/spark-submit \
   --conf spark.sql.legacy.parquet.nanosAsLong=true \
   --conf spark.ui.enabled=false \
   --conf spark.sql.extensions=graft.functions.GraftExtensions \
+  --conf spark.sql.codegen.cache.maxEntries=4096 \
   "$JAR" "$SF_DIR"

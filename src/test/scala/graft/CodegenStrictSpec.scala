@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
+import org.apache.spark.sql.internal.StaticSQLConf
+
 import graft.queries.Catalog
 
 /** Executes EVERY catalog query with whole-stage-codegen fallback
@@ -19,6 +22,10 @@ import graft.queries.Catalog
   * Execution (not just planning) is required — codegen compiles lazily
   * at first execute. sf0.001 keeps the sweep to ~2-4 min; the noop sink
   * forces the full plan like Bench does.
+  *
+  * The second case pins the other side of codegen cost: a query run
+  * again after many other compiles must reuse its cached classes, which
+  * needs build.sbt's `spark.sql.codegen.cache.maxEntries`.
   */
 class CodegenStrictSpec extends SparkSpec {
 
@@ -46,5 +53,31 @@ class CodegenStrictSpec extends SparkSpec {
           "expression chain into a compiled kernel):\n" +
           failures.map { case (n, m) => s"  $n: $m" }.mkString("\n"))
     } finally spark.conf.set("spark.sql.codegen.fallback", prev)
+  }
+
+  test("a query's generated classes survive more than Spark's default " +
+      "100 other compiles") {
+    // A failed compile is never cached, so with fallback off the sweep
+    // above still sees every compile failure whatever this bound is.
+    val key = StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.key
+    val bound = spark.conf.get(key)
+    assert(bound != StaticSQLConf.CODEGEN_CACHE_MAX_ENTRIES.defaultValueString,
+      s"$key is Spark's default $bound: run with build.sbt's javaOptions, " +
+        "which size the class cache to the catalog's working set")
+    def compiles(body: => Unit): Long = {
+      val n0 = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      body
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - n0
+    }
+    def x(): Unit = spark.range(1000).selectExpr("id % 7 AS k", "id * 3 AS v")
+      .groupBy("k").sum("v").collect()
+    x()
+    val others = compiles((1 to 150).foreach { i =>
+      spark.range(10).selectExpr(s"id * 7919 + $i").collect()
+    })
+    assert(others > 100, s"only $others distinct classes compiled")
+    val rerun = compiles(x())
+    assert(rerun == 0,
+      s"rerun recompiled $rerun classes after $others others ($key = $bound)")
   }
 }

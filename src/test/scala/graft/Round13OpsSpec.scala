@@ -7,30 +7,59 @@ import graft.sources.Html
 
 /** Round-13 operators: the real-markup boilerplate path (own-parser DOM
   * leaf blocks feeding the shared jusText classifier) pinned against a
-  * REFERENCE fixture page, and the domain-level curation stage.
+  * hand-written gomus-style page and, where the reference checkout is
+  * present, a REFERENCE fixture page; and the domain-level curation stage.
   */
 class Round13OpsSpec extends SparkSpec {
 
-  test("leafBlocks + blockVerdict classify a reference gomus page: " +
-      "script text excluded, nav link-dense, detail cells kept") {
+  /** (block text, link-text chars, verdict) for every leaf block of a
+    * page; asserts that no script text surfaced in any block. */
+  private def classify(src: String): Array[(String, Int, String)] = {
     import spark.implicits._
-    val src = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get(
-        "/root/reference/tests/test_data/gomus/quotas/quotas_1.html")),
-      "UTF-8")
     val blocks = Html.leafBlocks(Html.parse(src))
     assert(blocks.nonEmpty)
-    // raw-text exclusion: the page head carries a large rollbar JS blob;
-    // none of it may surface as block text
+    // raw-text exclusion: the page carries a rollbar JS blob; none of it
+    // may surface as block text
     assert(!blocks.exists(_._1.contains("_rollbarConfig")),
       "script text leaked into a block")
-    val classified = blocks.zipWithIndex
+    blocks.zipWithIndex
       .map { case ((btext, ll), i) => (i, btext, ll) }
       .toDF("bidx", "btext", "link_len")
       .withColumn("v", TextQueries.blockVerdict(col("btext"), col("link_len")))
       .collect()
       .map(r => (r.getAs[String]("btext"), r.getAs[Int]("link_len"),
         r.getAs[String]("v")))
+  }
+
+  test("leafBlocks + blockVerdict classify a hand-written gomus page: " +
+      "script text excluded, nav link-dense, detail cells kept") {
+    val src = new String(getClass.getResourceAsStream("/gomus_quota_page.html")
+      .readAllBytes(), "UTF-8")
+    val classified = classify(src)
+    // 13 leaf blocks: the script's host div (empty once the script is
+    // excluded), 4 nav items, the breadcrumb, 6 detail cells, 1 paragraph
+    assert(classified.length == 13, classified.mkString("\n"))
+    val byV = classified.groupBy(_._3).view.mapValues(_.length).toMap
+    assert(byV == Map("link" -> 5, "short" -> 6, "lowstop" -> 1,
+      "content" -> 1), byV)
+    assert(classified.contains(("", 0, "short")))
+    assert(classified.contains(("Kontingent bearbeiten", 21, "link")))
+    assert(classified.contains(("Tickets & Preise", 16, "link")))
+    assert(classified.contains(("Tausendfüßler-Kontingent", 0, "short")))
+    assert(classified.contains(("14. März 2015, 13:41 Uhr", 0, "lowstop")))
+    // link-text attribution comes from DOM <a> descendants, not regex:
+    // the second breadcrumb anchor carries nested markup whose text counts
+    assert(classified.contains(("Start / Kontingente (3)", 20, "link")))
+    assert(classified.exists { case (t, ll, v) =>
+      t.startsWith("The quota applies") && ll == 0 && v == "content" })
+  }
+
+  test("leafBlocks + blockVerdict classify a reference gomus page: " +
+      "script text excluded, nav link-dense, detail cells kept") {
+    val refData = java.nio.file.Paths.get("/root/reference/tests/test_data")
+    assume(java.nio.file.Files.isDirectory(refData))
+    val classified = classify(new String(java.nio.file.Files.readAllBytes(
+      refData.resolve("gomus/quotas/quotas_1.html")), "UTF-8"))
     // golden pins over the real page (311 leaf blocks): the sidebar /
     // navbar menus are link-dense, the quota detail cells are short
     // fragments, and the German date lines land lowstop (the stopword
