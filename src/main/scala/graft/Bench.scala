@@ -150,13 +150,8 @@ object Bench {
     val gateMode = args.contains("--gate")
     // Driver contract: bench runs at local[32].
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = graft.core.Tables.localSession(cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // Own-load sampler starts BEFORE the heap/table/codegen warm-ups:

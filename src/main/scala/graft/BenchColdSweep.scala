@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** One-shot COLD sweep: every catalog query executed exactly once to a
   * noop sink, per-query wall seconds dumped as one JSON file (r11
   * verdict item 8 — the ×100 execution times existed only as a
@@ -26,13 +24,9 @@ object BenchColdSweep {
     // a cluster sizes shuffle partitions to the data, the local
     // contract can't.
     val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+    val spark = graft.core.Tables.localSession(cpus)
       .config("spark.sql.shuffle.partitions", shufParts)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val selected = only match {

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection tool: prints the formatted physical plan of the named
   * catalog queries (all when none named) so pushdown, pruning, broadcast
   * choice and WholeStageCodegen coverage can be audited per query —
@@ -13,13 +11,7 @@ object Explain {
     val names = args.drop(1).headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.core.Tables.localSession("4").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n========== $name ==========")

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Post-execution plan inspection: runs the named catalog queries
   * through the noop sink (same action as Bench) and prints the FINAL
   * AQE plan — the only place runtime decisions (exchange/stage reuse,
@@ -16,18 +14,13 @@ object ExplainExecuted {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = graft.core.Tables.localSession(cpus)
       .config("spark.sql.adaptive.enabled", "true")
       // Pin the broadcast threshold to PlanBudget.forCatalog's value so
       // the executed plans this tool certifies (join strategy, exchange
       // reuse) match the budget gate's on any host (r14 ADVICE item 3).
       .config("spark.sql.autoBroadcastJoinThreshold",
         (10L * 1024 * 1024).toString)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Mint a larger scale-factor copy of the driver's test tables by
@@ -96,13 +96,7 @@ object MintScale {
     val k = pos.lift(2).map(_.toInt)
       .getOrElse(if (skew.isDefined || reseed.isDefined) 1 else 10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.core.Tables.localSession(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     val rekey: Map[String, Seq[String]] = Map(

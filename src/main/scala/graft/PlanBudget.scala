@@ -144,14 +144,7 @@ object PlanBudgetProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "docs/PLAN_BUDGET.json"
-    val spark = SparkSession
-      .builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.core.Tables.localSession("4").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val counts = PlanBudget.forCatalog(spark, dir)
     Files.writeString(Paths.get(out), PlanBudget.render(dir, counts))

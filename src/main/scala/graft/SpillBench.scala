@@ -31,13 +31,8 @@ object SpillBench {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(heavyDefault)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = graft.core.Tables.localSession(cpus)
       .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -3,7 +3,6 @@ package graft.bronze
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
 
 /** Bronze-layer normalizers for the museum booking system ("gomus")
   * report payloads — the SURVEY.md §2.1/§2.3 payload halves (S2 report
@@ -20,7 +19,7 @@ object Gomus {
 
   /** mmh3-parity privacy hash (P4): seed-666 signed murmur3 over the
     * expression given as SQL text (the `murmur3_seeded` codegen expression,
-    * registered on the session by the caller-facing extractors).
+    * so the caller's session must have graft installed; `Q.spark` does).
     * Reference src/gomus/_utils/extract_customers.py:135-140. */
   private def privacyHash(innerSql: String): Column =
     expr(s"murmur3_seeded($innerSql, 666)")
@@ -52,7 +51,6 @@ object Gomus {
     *  - `Angebot/Termin` coalesce; `Anzahl Teilnehmende` NaN→0.
     */
   def extractBookings(raw: DataFrame): DataFrame = {
-    GraftFunctions.register(raw.sparkSession)
     val guideHash = privacyHash(
       "element_at(split(replace(lower(Guide), ' ', ''), ','), 1)")
     val startTs = to_timestamp(
@@ -89,7 +87,6 @@ object Gomus {
     *    contained in the email (P9).
     */
   def extractCustomers(raw: DataFrame): DataFrame = {
-    GraftFunctions.register(raw.sparkSession)
     val tags = Seq("reise", "kultur", "freunde", "förder", "foerder",
       "guide", "hotel", "travel", "event", "visit", "verein", "stiftung")
     val email = col("E-Mail")
@@ -123,7 +120,6 @@ object Gomus {
     * [[extractCustomers]] emits — the join key bridge between raw gomus
     * reports and the hashed customer dimension. */
   def gomusToCustomerMapping(raw: DataFrame): DataFrame = {
-    GraftFunctions.register(raw.sparkSession)
     raw.select(
       col("Nummer").cast("double").cast("long").as("gomus_id"),
       when(col("E-Mail").isNotNull, privacyHash("`E-Mail`"))
@@ -238,7 +234,6 @@ object Gomus {
     *                 sheet identity (`booking_id`, boolean `cancelled`).
     */
   def extractEvents(bookings: DataFrame, sheets: DataFrame): DataFrame = {
-    GraftFunctions.register(bookings.sparkSession)
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("category")
       .orderBy(col("start_datetime").desc, col("booking_id").desc)

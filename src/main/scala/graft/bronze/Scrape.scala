@@ -221,14 +221,6 @@ object Scrape {
     BookingDetailRow(bookingId, customerId, orderDate, language, gomusId)
   }
 
-  /** Distributed EnhanceBookingsWithScraper (scrape half). */
-  def bookingDetails(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    pages(spark, dir).map { case (path, content) =>
-      extractBookingDetail(pathId(path), new String(content, "UTF-8"))
-    }.toDF()
-  }
-
   // ------------------------------------------------------ order articles
   final case class OrderArticleRow(article_id: Long, article_type: String,
       order_id: Long, ticket: String, date: Timestamp, quantity: Int,

@@ -16,6 +16,18 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** The local session every entrypoint builds: `local[cores]` with as
+    * many shuffle partitions, the session timezone pinned UTC (see
+    * [[normalizeNtz]]), TIMESTAMP(NANOS) read as long (see [[events]])
+    * and no UI. Callers add their own conf before `getOrCreate()`. */
+  def localSession(cores: String): SparkSession.Builder =
+    SparkSession.builder()
+      .master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+
   /** Parquet scan with column pruning / predicate pushdown left to Catalyst.
     * All timestamp columns are normalized via [[normalizeNtz]] so downstream
     * operators see exactly one timestamp type regardless of how the fixture
@@ -34,9 +46,9 @@ object Tables {
     * event time), typed Datasets with `java.sql.Timestamp` fields (NTZ
     * decodes as `java.time.LocalDateTime`) — needs exactly one type, so
     * every NTZ column is cast to TimestampType here. The session timezone
-    * is pinned UTC in every entrypoint, so the NTZ→TZ cast preserves the
-    * wall clock and epoch-based comparisons match what DuckDB's naive
-    * reads of the same files compute. */
+    * is pinned UTC in every entrypoint ([[localSession]]), so the NTZ→TZ
+    * cast preserves the wall clock and epoch-based comparisons match what
+    * DuckDB's naive reads of the same files compute. */
   def normalizeNtz(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.types.{TimestampNTZType, TimestampType}
     val ntz = df.schema.fields.collect {
@@ -89,10 +101,4 @@ object Tables {
       .option("allowComments", "true")
       .option("multiLine", "true")
       .json(path)
-
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach { n =>
-      val df = if (n == "events") events(spark, dir) else load(spark, dir, n)
-      df.createOrReplaceTempView(n)
-    }
 }

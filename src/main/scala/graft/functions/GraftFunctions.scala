@@ -4,12 +4,20 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
+import org.apache.spark.sql.classic.Strategy
 
-/** Registration of graft's custom Catalyst expressions.
+/** Installation of graft into a Spark session: the custom Catalyst
+  * expressions, the three bound-rewrite optimizer rules and the TopK
+  * planner strategy, written down once in [[GraftFunctions.builders]],
+  * [[GraftFunctions.rules]] and [[GraftFunctions.strategies]].
   *
-  * Two paths to the same registry entries:
-  *  - [[GraftFunctions.register]] for an existing session (used by the
-  *    query catalog / tests);
+  * Two routes install those same lists:
+  *  - [[GraftFunctions.register]] for an existing session. `Q.spark`
+  *    (`graft.queries.Catalog`) calls it before it builds a query, so
+  *    every caller that reaches a query through the catalog runs on an
+  *    installed session;
   *  - [[GraftExtensions]] for `spark.sql.extensions=graft.functions.GraftExtensions`
   *    (the SparkSessionExtensions route for cluster deployments).
   *
@@ -72,24 +80,25 @@ object GraftFunctions {
     "bloom_contains" -> (exprs => BloomContainsLong(exprs(0), binOf(exprs(1)))),
     "misra_gries" -> (exprs => MisraGriesAgg(exprs(0), seedOf(exprs(1)))))
 
+  val rules: Seq[Rule[LogicalPlan]] = Seq(graft.plans.LevenshteinBoundRule,
+    graft.plans.TrigramBoundRule, graft.plans.JaroWinklerBoundRule)
+
+  val strategies: Seq[Strategy] = Seq(graft.plans.TopKStrategy)
+
+  /** Idempotent: a function whose name the session already knows (from
+    * an earlier call, or injected by [[GraftExtensions]]) is kept, and a
+    * rule or strategy already in the session's experimental list is not
+    * added again, so a second call changes nothing and logs nothing. */
   def register(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
     builders.foreach { case (name, b) =>
-      reg.createOrReplaceTempFunction(name, b, "built-in")
+      if (!reg.functionExists(FunctionIdentifier(name))) {
+        reg.createOrReplaceTempFunction(name, b, "built-in")
+      }
     }
-    // Optimizer rules and planner strategies ride the same registration
-    // call; both are idempotent to re-register (replace, don't
-    // append-duplicate).
-    val rules: Seq[org.apache.spark.sql.catalyst.rules.Rule[
-      org.apache.spark.sql.catalyst.plans.logical.LogicalPlan]] =
-      Seq(graft.plans.LevenshteinBoundRule, graft.plans.TrigramBoundRule,
-        graft.plans.JaroWinklerBoundRule)
-    spark.experimental.extraOptimizations =
-      (spark.experimental.extraOptimizations.filterNot(rules.contains) ++ rules)
-    val strategies = Seq(graft.plans.TopKStrategy)
-    spark.experimental.extraStrategies =
-      (spark.experimental.extraStrategies.filterNot(strategies.contains)
-        ++ strategies)
+    val exp = spark.experimental
+    exp.extraOptimizations ++= rules.filterNot(exp.extraOptimizations.contains)
+    exp.extraStrategies ++= strategies.filterNot(exp.extraStrategies.contains)
   }
 }
 
@@ -101,9 +110,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo(classOf[TrigramSimilarity].getName, name),
         b))
     }
-    ext.injectOptimizerRule(_ => graft.plans.LevenshteinBoundRule)
-    ext.injectOptimizerRule(_ => graft.plans.TrigramBoundRule)
-    ext.injectOptimizerRule(_ => graft.plans.JaroWinklerBoundRule)
-    ext.injectPlannerStrategy(_ => graft.plans.TopKStrategy)
+    GraftFunctions.rules.foreach(r => ext.injectOptimizerRule(_ => r))
+    GraftFunctions.strategies.foreach(st => ext.injectPlannerStrategy(_ => st))
   }
 }

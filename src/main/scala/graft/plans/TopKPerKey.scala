@@ -38,9 +38,10 @@ import org.apache.spark.sql.execution.{SparkPlan, UnaryExecNode}
   * must be TOTAL (caller includes a unique tiebreak) for deterministic
   * results, same as every catalog window.
   *
-  * Registered via `graft.functions.GraftFunctions.register`
-  * (experimental.extraStrategies) and `GraftExtensions.
-  * injectPlannerStrategy` — the SparkSessionExtensions route.
+  * Installed from `graft.functions.GraftFunctions.strategies` by
+  * `GraftFunctions.register` (experimental.extraStrategies) and by
+  * `GraftExtensions` (injectPlannerStrategy) — the SparkSessionExtensions
+  * route.
   */
 case class TopKPerKey(
     keys: Seq[Expression],
@@ -96,31 +97,25 @@ case class TopKPairsPerKey(
 
 /** Public face: `TopK.perKey(df, keys, order, k)` — the order list is
   * (column, ascending) pairs and MUST be total (include a unique
-  * tiebreak). */
+  * tiebreak). `df`'s session must have graft installed (`Q.spark`,
+  * `GraftFunctions.register` or `GraftExtensions`); without
+  * [[TopKStrategy]] the planner fails with "No plan for TopKPerKey". */
 object TopK {
   import org.apache.spark.sql.{Column, DataFrame}
   import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
   import org.apache.spark.sql.catalyst.expressions.{Ascending, AttributeReference, Descending}
   import org.apache.spark.sql.functions.{col, struct}
 
-  private def ensureStrategy(spark: org.apache.spark.sql.SparkSession): Unit =
-    if (!spark.experimental.extraStrategies.contains(TopKStrategy)) {
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKStrategy
-    }
-
   def perKey(df: DataFrame, keyCols: Seq[String],
       order: Seq[(String, Boolean)], k: Int): DataFrame = {
     require(k > 0, "k must be positive")
-    val spark = df.sparkSession
-    ensureStrategy(spark)
     val node = TopKPerKey(
       keyCols.map(UnresolvedAttribute(_)),
       order.map { case (c, asc) =>
         SortOrder(UnresolvedAttribute(c), if (asc) Ascending else Descending)
       },
       k, df.queryExecution.logical)
-    org.apache.spark.sql.GraftSqlBridge.ofRows(spark, node)
+    org.apache.spark.sql.GraftSqlBridge.ofRows(df.sparkSession, node)
   }
 
   /** Within-group pairs of the top-k rows per key (see
@@ -133,8 +128,6 @@ object TopK {
       order: Seq[(String, Boolean)], payload: Seq[String],
       k: Int): DataFrame = {
     require(k > 0, "k must be positive")
-    val spark = df.sparkSession
-    ensureStrategy(spark)
     val extraCols = (order.map(_._1) ++ payload)
       .filterNot(keyCols.contains).distinct
     val packed = df
@@ -154,7 +147,7 @@ object TopK {
         SortOrder(byName(c), if (asc) Ascending else Descending)
       },
       k, payloadAttrs, xy, analyzed)
-    org.apache.spark.sql.GraftSqlBridge.ofRows(spark, node)
+    org.apache.spark.sql.GraftSqlBridge.ofRows(df.sparkSession, node)
   }
 }
 

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One engine capability demonstrated end-to-end on the test tables.
   *
+  * @param build  the query's builder; callers go through [[spark]].
   * @param oracle ANSI SQL for DuckDB over the same parquet tables, producing
   *               a result that hash-matches `spark` (columns sorted by name
   *               before hashing — so every computed column is aliased
@@ -12,9 +13,18 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 final case class Q(
     name: String,
-    spark: (SparkSession, String) => DataFrame,
+    build: (SparkSession, String) => DataFrame,
     oracle: Option[String],
-    doc: String = "")
+    doc: String = "") {
+
+  /** The query on `s` over the tables in `dir`. Installs graft into `s`
+    * first ([[graft.functions.GraftFunctions.register]], idempotent), so
+    * a plan never depends on which queries ran earlier in the session. */
+  def spark(s: SparkSession, dir: String): DataFrame = {
+    graft.functions.GraftFunctions.register(s)
+    build(s, dir)
+  }
+}
 
 /** Full query catalog = the executable form of SURVEY.md §2's operator
   * inventory plus the large-scale training-data-pipeline operators.

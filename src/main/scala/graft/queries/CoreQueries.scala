@@ -713,7 +713,6 @@ object CoreQueries extends QueryBase {
     Q(
       "agg_theta_overlap",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val k = 32
         // Per-type salted subset (drop ~1/4 of users per type, salt =
         // first letter) so the pairwise overlaps actually DIFFER — the
@@ -1010,7 +1009,6 @@ object CoreQueries extends QueryBase {
     Q(
       "agg_heavy_hitters",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val K = 8
         val tok = th(s, dir, "documents")
           .select(col("lang"), explode(CurationDefs.toks).as("w"))

@@ -77,7 +77,6 @@ object CurationQueries extends QueryBase {
     * parallelism.
     */
   def curateChunks(docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     chunkExplode(
       docs.select(col("doc_id"), toks.as("t"))
         .filter(expr(s"repetition_keep(t, $DupMax, $TopMax)")))

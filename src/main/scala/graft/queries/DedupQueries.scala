@@ -52,7 +52,6 @@ object DedupQueries extends QueryBase {
   private def embeddingPairs(s: SparkSession, dir: String): DataFrame = {
     val e = th(s, dir, "embeddings")
     val v = e.select(col("vec_id"), col("embedding").as("vv"))
-    graft.functions.GraftFunctions.register(s)
     // Probe cap via the TopKPerKey operator (r6 verdict item 1): the
     // row_number window form sorts every bucket in full; the bounded
     // heap keeps the same k-smallest vec_ids per (bd, bkey) — identical
@@ -180,7 +179,6 @@ object DedupQueries extends QueryBase {
   private val winnowingQ = Q(
     "dedup_winnowing",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val d0 = th(s, dir, "documents").select(col("doc_id"),
         lower(col("text")).as("t"))
       val d = d0.unionByName(d0.filter(col("doc_id") % 10 === 0)
@@ -400,7 +398,6 @@ object DedupQueries extends QueryBase {
       // to the expression chain it replaced — the per-window
       // `array_min(slice(g, j, 4))` alone allocated a 4-element array
       // per sample position). The oracle replays the same chain in SQL.
-      graft.functions.GraftFunctions.register(s)
       val fp = samp
         .select(col("media_id"),
           explode(expr("audio_winnow_fps(smp)")).as("h"))
@@ -815,7 +812,6 @@ object DedupQueries extends QueryBase {
         // no per-token Seq[String] boxing (the interpreted-lambda version
         // re-hashed every shingle 12x and was ~50x slower; the UDF form
         // paid a per-row converter on top of the kernel).
-        graft.functions.GraftFunctions.register(s)
         // Probe cap (see dedup_embedding_cosine): near-identical template
         // docs collide on whole signatures, so an uncapped bucket join
         // goes quadratic in the hottest bucket.
@@ -905,7 +901,6 @@ object DedupQueries extends QueryBase {
         // Compiled kernel as a native expression: one md5 per distinct
         // token, 32-bit sign aggregation, straight off ArrayData (the
         // interpreted-lambda form of the same math was ~50x slower).
-        graft.functions.GraftFunctions.register(s)
         d.withColumn("toks", array_distinct(split(lower(col("text")), "\\s+")))
           .withColumn("simhash", expr("simhash32(toks)"))
           .groupBy("simhash")
@@ -937,7 +932,6 @@ object DedupQueries extends QueryBase {
       "dedup_ngram_jaccard",
       (s, dir) => {
         val d = th(s, dir, "documents")
-        graft.functions.GraftFunctions.register(s)
         val g = d.select(col("doc_id"), col("n_chars"),
           expr("char_trigrams(lower(text))").as("grams"))
         // Probe cap: at most 64 docs per length bucket meet pairwise, so
@@ -1307,7 +1301,6 @@ object DedupQueries extends QueryBase {
   private[queries] lazy val incrementalBloomQ = Q(
     "dedup_incremental_bloom",
     (s, dir) => {
-      graft.functions.GraftFunctions.register(s)
       val d = th(s, dir, "documents")
       // 60-bit fingerprint of the normalized text (md5-prefix — the
       // engine/oracle-portable hash, same trick as the LSH band keys).

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.functions.GraftFunctions
 
 /** Queries exercising graft's custom Catalyst expressions (SURVEY.md §4):
   * `trigram_sim` (pg_trgm semantics, J6/N11) and `murmur3_seeded`
@@ -23,7 +22,6 @@ object FunctionQueries extends QueryBase {
     Q(
       "func_trigram_match",
       (s, dir) => {
-        GraftFunctions.register(s)
         val p = t(s, dir, "part")
         val lex = s.createDataFrame(Seq(
           Tuple1("brnad#13"), Tuple1("brand 45"), Tuple1("brnd#55"),
@@ -75,7 +73,6 @@ object FunctionQueries extends QueryBase {
     Q(
       "func_jaro_winkler",
       (s, dir) => {
-        GraftFunctions.register(s)
         val d = t(s, dir, "documents")
         val probes = s.createDataFrame(Seq(
           Tuple1("bacth"), Tuple1("jion"), Tuple1("hashh"), Tuple1("windoww"),
@@ -113,7 +110,6 @@ object FunctionQueries extends QueryBase {
     Q(
       "join_fuzzy_jaro",
       (s, dir) => {
-        GraftFunctions.register(s)
         val d = t(s, dir, "documents")
         val probes = s.createDataFrame(Seq(
           Tuple1("bacth"), Tuple1("jion"), Tuple1("hashh"), Tuple1("windoww"),
@@ -169,7 +165,6 @@ object FunctionQueries extends QueryBase {
     Q(
       "join_jaro_prefilter",
       (s, dir) => {
-        GraftFunctions.register(s)
         val d = t(s, dir, "documents")
         val probes = s.createDataFrame(Seq(
           Tuple1("bacth"), Tuple1("jion"), Tuple1("hashh"), Tuple1("windoww"),
@@ -212,7 +207,6 @@ object FunctionQueries extends QueryBase {
     Q(
       "join_trigram_prefilter",
       (s, dir) => {
-        GraftFunctions.register(s)
         val p = t(s, dir, "part")
         val lex = s.createDataFrame(Seq(
           Tuple1("brnad#13"), Tuple1("brand 45"), Tuple1("brnd#55"),
@@ -258,7 +252,6 @@ object FunctionQueries extends QueryBase {
     Q(
       "func_murmur3_hash",
       (s, dir) => {
-        GraftFunctions.register(s)
         val c = t(s, dir, "customer")
         c.select(col("c_custkey"),
             expr("murmur3_seeded(c_name, 666)").as("privacy_hash"))

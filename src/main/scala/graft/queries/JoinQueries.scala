@@ -288,7 +288,6 @@ object JoinQueries extends QueryBase {
     Q(
       "join_fuzzy_threshold",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val p = t(s, dir, "part")
         val lex = s.createDataFrame(Seq(
           Tuple1("Brnd#13"), Tuple1("Brand#5"), Tuple1("Brund#19"), Tuple1("brand#33")
@@ -428,7 +427,6 @@ object JoinQueries extends QueryBase {
     Q(
       "join_bloom_prune",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val dim = t(s, dir, "customer")
           .filter(col("c_mktsegment") === "BUILDING")
           .select("c_custkey", "c_nationkey")

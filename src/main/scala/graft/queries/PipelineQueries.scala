@@ -32,7 +32,6 @@ object PipelineQueries extends QueryBase {
 
   private def aspectMatches(s: org.apache.spark.sql.SparkSession,
       docs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    graft.functions.GraftFunctions.register(s)
     import s.implicits._
     val lex = aspectLexicon.toDF("aspect_id", "word")
     val passthrough = docs.columns.filter(_ != "text").toSeq
@@ -596,7 +595,6 @@ ${p}matched AS (
           .withColumn("rk",
             row_number().over(Window.partitionBy("fp").orderBy("doc_id")))
           .filter(col("rk") === 1).drop("rk")
-        graft.functions.GraftFunctions.register(s)
         val near = exact
           .withColumn("simhash", expr("simhash32(array_distinct(tk))"))
           .withColumn("rk",

@@ -101,7 +101,6 @@ object SimilarityQueries extends QueryBase {
     Q(
       "sim_ann_pq",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val v = vv(th(s, dir, "embeddings")).select("vec_id", "vv")
         val hsort = expr(
           "CAST(conv(substring(md5(CAST(vec_id AS STRING)), 1, 15), 16, 10) AS BIGINT)")
@@ -218,7 +217,6 @@ object SimilarityQueries extends QueryBase {
     Q(
       "sim_ann_bruteforce",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val v = vv(th(s, dir, "embeddings"))
         val q = broadcast(v.filter(col("vec_id") < 5)
           .select(col("vec_id").as("qid"), col("vv").as("qv")))
@@ -255,7 +253,6 @@ object SimilarityQueries extends QueryBase {
     Q(
       "sim_ann_ivf",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val v = vv(th(s, dir, "embeddings"))
         // Exact (order-independent) centroid build on the scaled-long
         // codegen path (same rewrite as agg_vector_centroid — the
@@ -334,7 +331,6 @@ object SimilarityQueries extends QueryBase {
       "sim_ann_lsh",
       (s, dir) => {
         val v = vv(th(s, dir, "embeddings"))
-        graft.functions.GraftFunctions.register(s)
         val buckets = graft.plans.TopK.perKey(
             v.select(col("vec_id"),
               posexplode(expr("band_keys_f(vv)")).as(Seq("bd", "bkey"))),
@@ -403,7 +399,6 @@ object SimilarityQueries extends QueryBase {
     Q(
       "sim_ann_sq8",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val v = vv(th(s, dir, "embeddings"))
         val corpus = sq8Corpus(v)
         val q = broadcast(v.filter(col("vec_id") < 5)
@@ -448,7 +443,6 @@ object SimilarityQueries extends QueryBase {
     Q(
       "sim_ann_ivf_sq8",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val v = vv(th(s, dir, "embeddings"))
         val cent = v.select(col("label"), posexplode(col("vv")).as(Seq("d", "x")))
           .groupBy("label", "d")
@@ -562,7 +556,6 @@ object SimilarityQueries extends QueryBase {
     Q(
       "sim_retrieve_rerank",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val v = vv(th(s, dir, "embeddings"))
         val corpus = sq8Corpus(v)
         val q = broadcast(v.filter(col("vec_id") < 5)
@@ -632,7 +625,6 @@ object SimilarityQueries extends QueryBase {
     Q(
       "sim_rerank_blend",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val v = vv(th(s, dir, "embeddings"))
         val corpus = sq8Corpus(v)
         val q = broadcast(v.filter(col("vec_id") < 5)
@@ -721,7 +713,6 @@ object SimilarityQueries extends QueryBase {
     Q(
       "sim_ann_recall_eval",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val v = vv(th(s, dir, "embeddings"))
         val q = broadcast(v.filter(col("vec_id") < 5)
           .select(col("vec_id").as("qid"), col("vv").as("qv")))

@@ -58,7 +58,6 @@ object SliceQueries extends QueryBase {
         val d = base.unionByName(base.filter(col("doc_id") % 10 === 0)
           .withColumn("doc_id", col("doc_id") + 100000))
         val shingled = d.select(col("doc_id"), DedupQueries.shingles3.as("sh"))
-        graft.functions.GraftFunctions.register(s)
         val banded = shingled.withColumn("sig", expr("minhash_sig(sh, 12)"))
           .select(col("doc_id"), explode(transform(sequence(lit(0), lit(3)),
             b => struct(b.as("bd"), md5(concat_ws(",",
@@ -145,7 +144,6 @@ object SliceQueries extends QueryBase {
     Q(
       "dedup_winnowing_slice",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         val d0 = th(s, dir, "documents").filter(contentSlice)
           .select(col("doc_id"), lower(col("text")).as("t"))
         val d = d0.unionByName(d0.filter(col("doc_id") % 10 === 0)

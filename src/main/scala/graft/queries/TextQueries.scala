@@ -920,7 +920,6 @@ object TextQueries extends QueryBase {
     Q(
       "text_repetition_filter",
       (s, dir) => {
-        graft.functions.GraftFunctions.register(s)
         // Sorted-input form (Finding A).
         val d = sortedByKeys(t(s, dir, "documents"), col("doc_id"))
         val bs = col("bs")

@@ -247,7 +247,6 @@ object Incremental {
     * the batch job would bucket with an earlier doc collides with it
     * here too. */
   private def minhashBands(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"), col("arrival"),
         graft.queries.DedupQueries.shingles3.as("sh"))
@@ -347,7 +346,6 @@ object Incremental {
     * partial aggregation needs. */
   def heavyHitters(items: DataFrame, window_ : String, late: String,
       k: Int): DataFrame = {
-    items.sparkSession match { case s => graft.functions.GraftFunctions.register(s) }
     items
       .withWatermark("ts", late)
       .groupBy(window(col("ts"), window_), col("grp"))
@@ -535,7 +533,6 @@ object Incremental {
     * runs it in both modes. `docs` must carry (post_id, text) plus
     * passthrough columns. */
   def aspectTokenMatches(docs: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val lexSql = graft.queries.PipelineQueries.aspectLexicon
       .map { case (id, w) => s"named_struct('aspect_id', $id, 'word', '$w')" }
       .mkString("array(", ", ", ")")

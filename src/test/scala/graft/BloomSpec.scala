@@ -41,7 +41,6 @@ class BloomSpec extends SparkSpec {
       .filter(col("c_mktsegment") === "BUILDING")
       .select("c_custkey")
     val bits = BloomOps.toBytes(dim.stat.bloomFilter("c_custkey", 4096, 0.01))
-    graft.functions.GraftFunctions.register(spark)
     val orders = Tables.load(spark, dir, "orders")
     val plain = orders.join(dim, orders("o_custkey") === dim("c_custkey"))
       .groupBy("o_orderpriority").count().collect().map(r => r.getString(0) -> r.getLong(1)).toMap
@@ -58,7 +57,6 @@ class BloomSpec extends SparkSpec {
       .filter(col("c_mktsegment") === "BUILDING")
       .select("c_custkey")
     val bits = BloomOps.toBytes(dim.stat.bloomFilter("c_custkey", 4096, 0.01))
-    graft.functions.GraftFunctions.register(spark)
     val orders = Tables.load(spark, dir, "orders")
     val total = orders.count()
     val trueMatch = orders.join(dim, orders("o_custkey") === dim("c_custkey")).count()

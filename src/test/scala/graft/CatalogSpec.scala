@@ -40,9 +40,11 @@ class CatalogSpec extends SparkSpec {
     }
   }
 
+  // Each query on a session of its own: a query must not depend on what
+  // earlier queries installed in or left behind in the session.
   Catalog.all.foreach { q =>
     test(s"runs: ${q.name}") {
-      val df = q.spark(spark, sfDir)
+      val df = q.spark(spark.newSession(), sfDir)
       assert(df.schema.nonEmpty)
       val n = df.count()
       if (!mayBeEmpty(q.name)) assert(n > 0, s"${q.name} returned 0 rows at sf0.001")

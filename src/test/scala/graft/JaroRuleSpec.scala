@@ -17,13 +17,7 @@ import graft.queries.Catalog
   */
 class JaroRuleSpec extends SparkSpec {
 
-  private def withRule[A](f: => A): A = {
-    graft.functions.GraftFunctions.register(spark)
-    f
-  }
-
   private def withoutRule[A](f: => A): A = {
-    graft.functions.GraftFunctions.register(spark)
     val saved = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations =
       saved.filterNot(_ eq graft.plans.JaroWinklerBoundRule)
@@ -45,16 +39,14 @@ class JaroRuleSpec extends SparkSpec {
     }.flatten
 
   test("rewrites >=, > and mirrored literal forms to the guarded cmp") {
-    withRule {
-      for ((predSql, strict) <- Seq(
-          ("jaro_winkler(a, b) >= 0.9", false),
-          ("0.9 <= jaro_winkler(a, b)", false),
-          ("jaro_winkler(a, b) > 0.8", true),
-          ("0.8 < jaro_winkler(a, b)", true))) {
-        val g = guarded(pairs.filter(expr(predSql)))
-        assert(g.nonEmpty, s"expected guarded jw cmp for $predSql")
-        assert(g.forall(_.strict == strict), s"wrong strictness for $predSql")
-      }
+    for ((predSql, strict) <- Seq(
+        ("jaro_winkler(a, b) >= 0.9", false),
+        ("0.9 <= jaro_winkler(a, b)", false),
+        ("jaro_winkler(a, b) > 0.8", true),
+        ("0.8 < jaro_winkler(a, b)", true))) {
+      val g = guarded(pairs.filter(expr(predSql)))
+      assert(g.nonEmpty, s"expected guarded jw cmp for $predSql")
+      assert(g.forall(_.strict == strict), s"wrong strictness for $predSql")
     }
   }
 
@@ -62,14 +54,12 @@ class JaroRuleSpec extends SparkSpec {
     for (predSql <- Seq("jaro_winkler(a, b) >= 0.9",
         "jaro_winkler(a, b) > 0.0", "jaro_winkler(a, b) >= 0.999",
         "0.7 <= jaro_winkler(a, b)")) {
-      val on = withRule { pairs.filter(expr(predSql)).collect().toSet }
+      val on = pairs.filter(expr(predSql)).collect().toSet
       val off = withoutRule { pairs.filter(expr(predSql)).collect().toSet }
       assert(on == off, s"rule changed results for $predSql")
     }
-    val proj = withRule {
-      pairs.select(expr("jaro_winkler(a, b) >= 0.9").as("m")).collect()
-        .map(r => if (r.isNullAt(0)) "null" else r.getBoolean(0).toString).toSeq
-    }
+    val proj = pairs.select(expr("jaro_winkler(a, b) >= 0.9").as("m")).collect()
+      .map(r => if (r.isNullAt(0)) "null" else r.getBoolean(0).toString).toSeq
     val projOff = withoutRule {
       pairs.select(expr("jaro_winkler(a, b) >= 0.9").as("m")).collect()
         .map(r => if (r.isNullAt(0)) "null" else r.getBoolean(0).toString).toSeq
@@ -104,25 +94,21 @@ class JaroRuleSpec extends SparkSpec {
   }
 
   test("non-literal thresholds and t<=0 `>=` comparisons are left alone") {
-    withRule {
-      val df = spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq(Row("abc", "abd", 0.5)), 1),
-        StructType(Seq(StructField("a", StringType),
-          StructField("b", StringType), StructField("k", DoubleType))))
-      assert(guarded(df.filter(expr("jaro_winkler(a, b) >= k"))).isEmpty,
-        "non-literal threshold must not be rewritten")
-      assert(guarded(df.filter(expr("jaro_winkler(a, b) >= 0.0"))).isEmpty,
-        ">= 0 is always reachable; must not be rewritten")
-    }
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row("abc", "abd", 0.5)), 1),
+      StructType(Seq(StructField("a", StringType),
+        StructField("b", StringType), StructField("k", DoubleType))))
+    assert(guarded(df.filter(expr("jaro_winkler(a, b) >= k"))).isEmpty,
+      "non-literal threshold must not be rewritten")
+    assert(guarded(df.filter(expr("jaro_winkler(a, b) >= 0.0"))).isEmpty,
+      ">= 0 is always reachable; must not be rewritten")
   }
 
   test("the catalog query join_jaro_prefilter runs on the guarded plan") {
-    withRule {
-      val df = Catalog.byName("join_jaro_prefilter")
-        .spark(spark, "/root/testdata/sf0.001")
-      assert(guarded(df).nonEmpty,
-        "catalog query should be rewritten to the guarded form")
-      assert(df.collect().length > 0)
-    }
+    val df = Catalog.byName("join_jaro_prefilter")
+      .spark(spark, "/root/testdata/sf0.001")
+    assert(guarded(df).nonEmpty,
+      "catalog query should be rewritten to the guarded form")
+    assert(df.collect().length > 0)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import scala.collection.mutable
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
-import graft.functions.{GraftFunctions, MisraGriesAgg}
+import graft.functions.MisraGriesAgg
 
 /** Misra–Gries heavy-hitters aggregate: exactness below capacity, the
   * underestimate/coverage theorems under real partitioned merges, top-k
@@ -12,7 +12,6 @@ import graft.functions.{GraftFunctions, MisraGriesAgg}
 class MisraGriesSpec extends SparkSpec {
 
   private def summarize(items: Seq[String], k: Int, parts: Int): Map[String, Long] = {
-    GraftFunctions.register(spark)
     import spark.implicits._
     val rows = items.toDF("w").repartition(parts)
     val out = rows.agg(expr(s"misra_gries(w, $k)").as("sk"))

@@ -106,7 +106,6 @@ class Round12OpsSpec extends SparkSpec {
 
   test("checksum kernels agree with their oracle-replayed HOF folds " +
       "through the registered SQL functions") {
-    graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
     val df = Seq("4111111111111111", "79927398713", "123456789")
       .toDF("s")

@@ -4,16 +4,19 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
 
+object SparkSpec {
+  /** Created, and graft installed into it, once per test JVM. */
+  lazy val session: SparkSession = {
+    val s = graft.core.Tables.localSession("4").getOrCreate()
+    graft.functions.GraftFunctions.register(s)
+    s
+  }
+}
+
 /** Shared local SparkSession for suites (small parallelism — test data is
   * tiny; shuffle partitions kept low so tests stay fast). */
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .getOrCreate()
+  lazy val spark: SparkSession = SparkSpec.session
 
   override def afterAll(): Unit = {
     // Session is shared process-wide across suites; do not stop it here.

@@ -18,13 +18,7 @@ import graft.queries.Catalog
   */
 class TrigramBoundRuleSpec extends SparkSpec {
 
-  private def withRule[A](f: => A): A = {
-    graft.functions.GraftFunctions.register(spark)
-    f
-  }
-
   private def withoutRule[A](f: => A): A = {
-    graft.functions.GraftFunctions.register(spark)
     val saved = spark.experimental.extraOptimizations
     spark.experimental.extraOptimizations =
       saved.filterNot(_ eq graft.plans.TrigramBoundRule)
@@ -48,16 +42,14 @@ class TrigramBoundRuleSpec extends SparkSpec {
     }.flatten
 
   test("rewrites >=, > and mirrored literal forms to the guarded cmp") {
-    withRule {
-      for ((predSql, strict) <- Seq(
-          ("trigram_sim(a, b) >= 0.35", false),
-          ("0.35 <= trigram_sim(a, b)", false),
-          ("trigram_sim(a, b) > 0.5", true),
-          ("0.5 < trigram_sim(a, b)", true))) {
-        val g = guarded(pairs.filter(expr(predSql)))
-        assert(g.nonEmpty, s"expected guarded trigram cmp for $predSql")
-        assert(g.forall(_.strict == strict), s"wrong strictness for $predSql")
-      }
+    for ((predSql, strict) <- Seq(
+        ("trigram_sim(a, b) >= 0.35", false),
+        ("0.35 <= trigram_sim(a, b)", false),
+        ("trigram_sim(a, b) > 0.5", true),
+        ("0.5 < trigram_sim(a, b)", true))) {
+      val g = guarded(pairs.filter(expr(predSql)))
+      assert(g.nonEmpty, s"expected guarded trigram cmp for $predSql")
+      assert(g.forall(_.strict == strict), s"wrong strictness for $predSql")
     }
   }
 
@@ -65,16 +57,14 @@ class TrigramBoundRuleSpec extends SparkSpec {
     for (predSql <- Seq("trigram_sim(a, b) >= 0.35",
         "trigram_sim(a, b) > 0.0", "trigram_sim(a, b) >= 0.999",
         "0.2 <= trigram_sim(a, b)")) {
-      val on = withRule { pairs.filter(expr(predSql)).collect().toSet }
+      val on = pairs.filter(expr(predSql)).collect().toSet
       val off = withoutRule { pairs.filter(expr(predSql)).collect().toSet }
       assert(on == off, s"rule changed results for $predSql")
     }
     // Null-propagation parity when the predicate is PROJECTED (where
     // false vs null is observable), not filtered.
-    val proj = withRule {
-      pairs.select(expr("trigram_sim(a, b) >= 0.35").as("m")).collect()
-        .map(r => if (r.isNullAt(0)) "null" else r.getBoolean(0).toString).toSeq
-    }
+    val proj = pairs.select(expr("trigram_sim(a, b) >= 0.35").as("m")).collect()
+      .map(r => if (r.isNullAt(0)) "null" else r.getBoolean(0).toString).toSeq
     val projOff = withoutRule {
       pairs.select(expr("trigram_sim(a, b) >= 0.35").as("m")).collect()
         .map(r => if (r.isNullAt(0)) "null" else r.getBoolean(0).toString).toSeq
@@ -109,25 +99,21 @@ class TrigramBoundRuleSpec extends SparkSpec {
   }
 
   test("non-literal thresholds and t<=0 `>=` comparisons are left alone") {
-    withRule {
-      val df = spark.createDataFrame(
-        spark.sparkContext.parallelize(Seq(Row("abc", "abd", 0.5)), 1),
-        StructType(Seq(StructField("a", StringType),
-          StructField("b", StringType), StructField("k", DoubleType))))
-      assert(guarded(df.filter(expr("trigram_sim(a, b) >= k"))).isEmpty,
-        "non-literal threshold must not be rewritten")
-      assert(guarded(df.filter(expr("trigram_sim(a, b) >= 0.0"))).isEmpty,
-        ">= 0 is always reachable; must not be rewritten")
-    }
+    val df = spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row("abc", "abd", 0.5)), 1),
+      StructType(Seq(StructField("a", StringType),
+        StructField("b", StringType), StructField("k", DoubleType))))
+    assert(guarded(df.filter(expr("trigram_sim(a, b) >= k"))).isEmpty,
+      "non-literal threshold must not be rewritten")
+    assert(guarded(df.filter(expr("trigram_sim(a, b) >= 0.0"))).isEmpty,
+      ">= 0 is always reachable; must not be rewritten")
   }
 
   test("the catalog query join_trigram_prefilter runs on the guarded plan") {
-    withRule {
-      val df = Catalog.byName("join_trigram_prefilter")
-        .spark(spark, "/root/testdata/sf0.001")
-      assert(guarded(df).nonEmpty,
-        "catalog query should be rewritten to the guarded form")
-      assert(df.collect().length > 0)
-    }
+    val df = Catalog.byName("join_trigram_prefilter")
+      .spark(spark, "/root/testdata/sf0.001")
+    assert(guarded(df).nonEmpty,
+      "catalog query should be rewritten to the guarded form")
+    assert(df.collect().length > 0)
   }
 }

@@ -12,13 +12,7 @@ import org.apache.spark.sql.functions._
 class WinnowKernelSpec extends SparkSpec {
   import spark.implicits._
 
-  private def registered() = {
-    graft.functions.GraftFunctions.register(spark)
-    spark
-  }
-
   test("audio_winnow_fps equals the expression chain on random PCM") {
-    registered()
     val rnd = new scala.util.Random(31)
     // production domain: the mint emits >= 64 samples — the expression
     // chain itself errors below 4 (q[i-1] over sequence(1, n-3) with
@@ -66,7 +60,6 @@ class WinnowKernelSpec extends SparkSpec {
   }
 
   test("winnow_min4 equals the expression chain incl. n<4 truncation") {
-    registered()
     val rnd = new scala.util.Random(47)
     val rows = Seq.tabulate(120) { i =>
       val len = if (i < 12) 1 + (i % 4) else 4 + rnd.nextInt(80)
@@ -84,7 +77,6 @@ class WinnowKernelSpec extends SparkSpec {
   }
 
   test("winnow_min4 is type-preserving on array<int> (murmur3 hashes)") {
-    registered()
     val rnd = new scala.util.Random(53)
     val rows = Seq.tabulate(120) { i =>
       val len = if (i < 12) 1 + (i % 4) else 4 + rnd.nextInt(80)
