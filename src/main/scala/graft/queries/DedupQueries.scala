@@ -30,10 +30,10 @@ object DedupQueries extends QueryBase {
     * are native codegen expressions (the interpreted-lambda formulation of
     * the same math was ~50x slower; the UDF form boxed every element on
     * top). Candidates come from bounded per-bucket pair enumeration
-    * ([[QueryBase.cappedPairs]], r15 — the earlier self-join needed a
-    * buckets persist because it consumed the band-key pipeline twice);
-    * per-bucket probe cap 32 bounds the quadratic term at any corpus
-    * size.
+    * ([[graft.plans.TopK.pairsPerKey]], r15 — the earlier self-join
+    * needed a buckets persist because it consumed the band-key pipeline
+    * twice); per-bucket probe cap 32 bounds the quadratic term at any
+    * corpus size.
     *
     * Each call rebuilds the PLAN, but storage is shared: Spark's
     * CacheManager registers cache entries by canonicalized plan, so the
@@ -86,9 +86,9 @@ object DedupQueries extends QueryBase {
     graft.core.CacheLedger.track(out)
   }
 
-  /** Distinct word-3-shingles of lower(text) (shared with the ×100
-    * stratified-slice twins in [[SliceQueries]] and the streaming
-    * near-dup admission gate in [[graft.streaming.Incremental]]). */
+  /** Distinct word-3-shingles of lower(text) (shared by the minhash and
+    * containment pipelines and the streaming near-dup admission gate in
+    * [[graft.streaming.Incremental]]). */
   private[graft] def shingles3: Column = {
     val tk = split(lower(col("text")), "\\s+")
     array_distinct(
@@ -97,6 +97,66 @@ object DedupQueries extends QueryBase {
           i => concat_ws(" ", element_at(tk, i), element_at(tk, i + 1),
             element_at(tk, i + 2))))
         .otherwise(array().cast("array<string>")))
+  }
+
+  /** The 4×3 MinHash band keys of shingled documents: a 12-hash
+    * `minhash_sig` per doc, cut into 4 bands of 3 rows, each band's key
+    * the md5 of its three hashes. Keeps every column of `shingled`
+    * except `sh` and adds `bd` (band index) and `bkey`. The one band
+    * derivation of `dedup_minhash_lsh`, its slice twin and the streaming
+    * text near-dup gate ([[graft.streaming.Incremental]]). */
+  private[graft] def minhashBands(shingled: DataFrame): DataFrame = {
+    val keep = shingled.columns.filter(_ != "sh").toSeq.map(col)
+    // Compiled signature kernel as a native expression: one md5 per
+    // shingle, affine per-seed family, consuming ArrayData directly —
+    // no per-token Seq[String] boxing (the interpreted-lambda version
+    // re-hashed every shingle 12x and was ~50x slower; the UDF form
+    // paid a per-row converter on top of the kernel).
+    shingled.withColumn("sig", expr("minhash_sig(sh, 12)"))
+      .select(keep :+ explode(transform(sequence(lit(0), lit(3)),
+        b => struct(b.as("bd"), md5(concat_ws(",",
+          element_at(col("sig"), b * 3 + 1).cast("string"),
+          element_at(col("sig"), b * 3 + 2).cast("string"),
+          element_at(col("sig"), b * 3 + 3).cast("string"))).as("bkey"))))
+        .as("b"): _*)
+      .select(keep ++ Seq(col("b.bd").as("bd"), col("b.bkey").as("bkey")): _*)
+  }
+
+  /** The `dedup_minhash_lsh` pipeline over documents `(doc_id, text)`:
+    * shingles, band keys, capped bucket pairs and the exact-Jaccard
+    * verify, persisted, counted and tracked. Also run by
+    * `dedup_minhash_slice` on its content slice. */
+  private[queries] def minhashPairs(d: DataFrame): DataFrame = {
+    val shingled = d.select(col("doc_id"), shingles3.as("sh"))
+    // Probe cap (see dedup_embedding_cosine): near-identical template
+    // docs collide on whole signatures, so an uncapped bucket join
+    // goes quadratic in the hottest bucket.
+    // Fused bucket cap + pair enumeration (r15, see
+    // dedup_audio_fingerprint). This also retires the bands persist:
+    // it existed only because the self-join consumed the capped
+    // frame twice (re-running the signature kernel per side); with
+    // the single fused operator the ≤32 bucket lists emit their
+    // pairs directly — no cache write, no second pass.
+    val cand = graft.plans.TopK.pairsPerKey(minhashBands(shingled),
+        Seq("bd", "bkey"), Seq(("doc_id", true)), Seq("doc_id"), 32)
+      .select(col("x_doc_id").as("left_id"), col("y_doc_id").as("right_id"))
+      .distinct()
+    val out = cand
+      .join(shingled.select(col("doc_id").as("lid"), col("sh").as("sa")),
+        col("left_id") === col("lid"))
+      .join(shingled.select(col("doc_id").as("rid"), col("sh").as("sb")),
+        col("right_id") === col("rid"))
+      .select(col("left_id"), col("right_id"),
+        round(expr("jaccard_sim(sa, sb)"), 6).as("jaccard"))
+      .filter(col("jaccard") >= 0.5)
+      .orderBy("left_id", "right_id")
+      // The verified-pair result is tiny (pairs that LSH-collided AND
+      // pass Jaccard ≥ 0.5); cache it eagerly so warm repeats serve
+      // from the pair set instead of re-running the pipeline.
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    out.count()
+    // tracked: Verify releases after the result is written (r10)
+    graft.core.CacheLedger.track(out)
   }
 
   /** Corpus-wide SEGMENT-level dedup with document rewrite — the C4 /
@@ -178,38 +238,8 @@ object DedupQueries extends QueryBase {
     * per DISTINCT gram (vocab-sized, joined back by position). */
   private val winnowingQ = Q(
     "dedup_winnowing",
-    (s, dir) => {
-      val d0 = th(s, dir, "documents").select(col("doc_id"),
-        lower(col("text")).as("t"))
-      val d = d0.unionByName(d0.filter(col("doc_id") % 10 === 0)
-        .withColumn("doc_id", col("doc_id") + 100000))
-        // Docs shorter than one gram (8 chars) have no full-width gram;
-        // drop them so every hashed substring is exactly 8 bytes — the
-        // fixed width the oracle's SQL murmur3 replay contracts on.
-        .filter(length(col("t")) >= 8)
-      val hs = d.withColumn("hs", expr(
-        "transform(sequence(1, greatest(length(t) - 7, 1)), " +
-          "i -> murmur3_seeded(substring(t, i, 8), 7))"))
-      // winnow_min4 kernel (r15): distinct w=4 window minima in one
-      // allocation-free pass — replaces the per-window
-      // `array_min(slice(hs, j, 4))` expression (one 4-element array
-      // per gram position), value-identical including the n<4
-      // truncated-window edge.
-      val fp = hs.select(col("doc_id"),
-          explode(expr("winnow_min4(hs)")).as("h"))
-        .distinct()
-      // Fused posting cap + pair enumeration (r15, see
-      // dedup_audio_fingerprint): same 32 smallest doc_ids per
-      // fingerprint as the old TopK.perKey cap, with the upper triangle
-      // emitted straight from the merged heaps — the r14 shuffle_hash
-      // form re-read the h-exchange and hash-built per partition.
-      graft.plans.TopK.pairsPerKey(fp, Seq("h"),
-          Seq(("doc_id", true)), Seq("doc_id"), 32)
-        .groupBy(col("x_doc_id").as("doc_a"), col("y_doc_id").as("doc_b"))
-        .agg(count(lit(1)).as("n_shared"))
-        .orderBy(col("n_shared").desc, col("doc_a"), col("doc_b"))
-        .limit(25)
-    },
+    (s, dir) => winnowPairs(th(s, dir, "documents").select(col("doc_id"),
+      lower(col("text")).as("t"))),
     Some(s"""
       WITH d0 AS (SELECT doc_id, lower(text) AS t FROM documents),
       d AS (SELECT * FROM (
@@ -247,6 +277,41 @@ object DedupQueries extends QueryBase {
       "density ~2/(w+1)): per-doc expression selection, capped " +
       "fingerprint-hash pair join; full murmur3 oracle replay over the " +
       "distinct-gram vocab")
+
+  /** The `dedup_winnowing` pipeline over lowercased documents
+    * `d0 = (doc_id, t)`: planted copies, gram hashes, window minima,
+    * posting cap and the top-25 shared-fingerprint pairs. Also run by
+    * `dedup_winnowing_slice` on its content slice. */
+  private[queries] def winnowPairs(d0: DataFrame): DataFrame = {
+    val d = d0.unionByName(d0.filter(col("doc_id") % 10 === 0)
+      .withColumn("doc_id", col("doc_id") + 100000))
+      // Docs shorter than one gram (8 chars) have no full-width gram;
+      // drop them so every hashed substring is exactly 8 bytes — the
+      // fixed width the oracle's SQL murmur3 replay contracts on.
+      .filter(length(col("t")) >= 8)
+    val hs = d.withColumn("hs", expr(
+      "transform(sequence(1, greatest(length(t) - 7, 1)), " +
+        "i -> murmur3_seeded(substring(t, i, 8), 7))"))
+    // winnow_min4 kernel (r15): distinct w=4 window minima in one
+    // allocation-free pass — replaces the per-window
+    // `array_min(slice(hs, j, 4))` expression (one 4-element array
+    // per gram position), value-identical including the n<4
+    // truncated-window edge.
+    val fp = hs.select(col("doc_id"),
+        explode(expr("winnow_min4(hs)")).as("h"))
+      .distinct()
+    // Fused posting cap + pair enumeration (r15, see
+    // dedup_audio_fingerprint): same 32 smallest doc_ids per
+    // fingerprint as the old TopK.perKey cap, with the upper triangle
+    // emitted straight from the merged heaps — the r14 shuffle_hash
+    // form re-read the h-exchange and hash-built per partition.
+    graft.plans.TopK.pairsPerKey(fp, Seq("h"),
+        Seq(("doc_id", true)), Seq("doc_id"), 32)
+      .groupBy(col("x_doc_id").as("doc_a"), col("y_doc_id").as("doc_b"))
+      .agg(count(lit(1)).as("n_shared"))
+      .orderBy(col("n_shared").desc, col("doc_a"), col("doc_b"))
+      .limit(25)
+  }
 
   /** Image near-duplicate detection over the multimodal column — the
     * dedup family extended to binary image payloads (VERDICT r5 item 7).
@@ -477,49 +542,8 @@ object DedupQueries extends QueryBase {
     * must surface with containment 1.0 against their source. */
   private val containmentQ = Q(
     "dedup_containment_minhash",
-    (s, dir) => {
-      val d = th(s, dir, "documents").select(col("doc_id"), col("text"))
-      val frags = d.filter(col("doc_id") % 10 === 0)
-        .select((col("doc_id") + 100000L).as("doc_id"),
-          expr("array_join(slice(split(lower(text), ' '), 1, " +
-            "greatest(size(split(lower(text), ' ')) DIV 2, 5)), ' ')")
-            .as("text"))
-      def shingleHashes(df: DataFrame): DataFrame =
-        df.select(col("doc_id"), explode(shingles3).as("sg"))
-          .select(col("doc_id"), h64(col("sg")).as("h"))
-          .distinct()
-      val fragH = shingleHashes(frags)
-      val corpusH = shingleHashes(d)
-        .select(col("doc_id").as("src_id"), col("h"))
-      // Both caps through TopKPerKey (r6 verdict item 1): the window
-      // form paid two corpus-shingle-sized sort passes (the query's
-      // whole cold cost); the bounded heaps keep the same rows —
-      // bottom-16 hashes per fragment, 32 smallest src_ids per hash —
-      // with map-side partial caps and no per-group sort.
-      val bottom = graft.plans.TopK.perKey(
-          fragH, Seq("doc_id"), Seq(("h", true)), 16)
-        .select("doc_id", "h")
-      // n_bottom = least(count(fragH per doc), 16) — and TopKPerKey
-      // keeps EXACTLY min(16, count) of the (distinct) per-doc hashes,
-      // so counting `bottom` gives the identical integer and fragH gains
-      // a single consumer: the shingle+md5 pipeline that used to run
-      // twice (VERDICT r14 item 5) runs once, and the count sits on
-      // bottom's existing doc_id exchange with no extra shuffle.
-      val nA = bottom.groupBy("doc_id")
-        .agg(count(lit(1)).as("n_bottom"))
-      val posting = graft.plans.TopK.perKey(
-          corpusH, Seq("h"), Seq(("src_id", true)), 32)
-        .select("src_id", "h")
-      bottom.join(posting, Seq("h"))
-        .groupBy("doc_id", "src_id").agg(count(lit(1)).as("n_match"))
-        .join(nA, Seq("doc_id"))
-        .withColumn("containment", round(
-          col("n_match").cast("double") / col("n_bottom").cast("double"), 6))
-        .filter(col("containment") >= 0.8)
-        .select(col("doc_id").as("frag_id"), col("src_id"),
-          col("n_match"), col("containment"))
-        .orderBy("frag_id", "src_id")
-    },
+    (s, dir) => containmentPairs(
+      th(s, dir, "documents").select(col("doc_id"), col("text"))),
     Some("""
       WITH d AS (SELECT doc_id, text FROM documents),
       frags AS (
@@ -572,6 +596,53 @@ object DedupQueries extends QueryBase {
     doc = "bottom-16 minhash CONTAINMENT estimate (Broder): asymmetric " +
       "doc-inside-doc detection, hash-join blocking with posting cap 32; " +
       "identical md5 hashes on both faces make the estimate exact")
+
+  /** The `dedup_containment_minhash` pipeline over documents
+    * `d = (doc_id, text)`: planted half-doc fragments, bottom-16
+    * fragment hashes, posting cap and the containment >= 0.8 pairs.
+    * Also run by `dedup_containment_slice` on its content slice. */
+  private[queries] def containmentPairs(d: DataFrame): DataFrame = {
+    val frags = d.filter(col("doc_id") % 10 === 0)
+      .select((col("doc_id") + 100000L).as("doc_id"),
+        expr("array_join(slice(split(lower(text), ' '), 1, " +
+          "greatest(size(split(lower(text), ' ')) DIV 2, 5)), ' ')")
+          .as("text"))
+    def shingleHashes(df: DataFrame): DataFrame =
+      df.select(col("doc_id"), explode(shingles3).as("sg"))
+        .select(col("doc_id"), h64(col("sg")).as("h"))
+        .distinct()
+    val fragH = shingleHashes(frags)
+    val corpusH = shingleHashes(d)
+      .select(col("doc_id").as("src_id"), col("h"))
+    // Both caps through TopKPerKey (r6 verdict item 1): the window
+    // form paid two corpus-shingle-sized sort passes (the query's
+    // whole cold cost); the bounded heaps keep the same rows —
+    // bottom-16 hashes per fragment, 32 smallest src_ids per hash —
+    // with map-side partial caps and no per-group sort.
+    val bottom = graft.plans.TopK.perKey(
+        fragH, Seq("doc_id"), Seq(("h", true)), 16)
+      .select("doc_id", "h")
+    // n_bottom = least(count(fragH per doc), 16) — and TopKPerKey
+    // keeps EXACTLY min(16, count) of the (distinct) per-doc hashes,
+    // so counting `bottom` gives the identical integer and fragH gains
+    // a single consumer: the shingle+md5 pipeline that used to run
+    // twice (VERDICT r14 item 5) runs once, and the count sits on
+    // bottom's existing doc_id exchange with no extra shuffle.
+    val nA = bottom.groupBy("doc_id")
+      .agg(count(lit(1)).as("n_bottom"))
+    val posting = graft.plans.TopK.perKey(
+        corpusH, Seq("h"), Seq(("src_id", true)), 32)
+      .select("src_id", "h")
+    bottom.join(posting, Seq("h"))
+      .groupBy("doc_id", "src_id").agg(count(lit(1)).as("n_match"))
+      .join(nA, Seq("doc_id"))
+      .withColumn("containment", round(
+        col("n_match").cast("double") / col("n_bottom").cast("double"), 6))
+      .filter(col("containment") >= 0.8)
+      .select(col("doc_id").as("frag_id"), col("src_id"),
+        col("n_match"), col("containment"))
+      .orderBy("frag_id", "src_id")
+  }
 
   /** Exact-substring dedup (Lee et al. 2022, "Deduplicating Training
     * Data Makes Language Models Better" — the ExactSubstr variant): any
@@ -804,53 +875,7 @@ object DedupQueries extends QueryBase {
     // the pair join shuffles on the band key, never crosses buckets.
     Q(
       "dedup_minhash_lsh",
-      (s, dir) => {
-        val d = th(s, dir, "documents")
-        val shingled = d.select(col("doc_id"), shingles3.as("sh"))
-        // Compiled signature kernel as a native expression: one md5 per
-        // shingle, affine per-seed family, consuming ArrayData directly —
-        // no per-token Seq[String] boxing (the interpreted-lambda version
-        // re-hashed every shingle 12x and was ~50x slower; the UDF form
-        // paid a per-row converter on top of the kernel).
-        // Probe cap (see dedup_embedding_cosine): near-identical template
-        // docs collide on whole signatures, so an uncapped bucket join
-        // goes quadratic in the hottest bucket.
-        val banded = shingled.withColumn("sig", expr("minhash_sig(sh, 12)"))
-          .select(col("doc_id"), explode(transform(sequence(lit(0), lit(3)),
-            b => struct(b.as("bd"), md5(concat_ws(",",
-              element_at(col("sig"), b * 3 + 1).cast("string"),
-              element_at(col("sig"), b * 3 + 2).cast("string"),
-              element_at(col("sig"), b * 3 + 3).cast("string"))).as("bkey"))))
-            .as("b"))
-          .select(col("doc_id"), col("b.bd").as("bd"),
-            col("b.bkey").as("bkey"))
-        // Fused bucket cap + pair enumeration (r15, see
-        // dedup_audio_fingerprint). This also retires the bands persist:
-        // it existed only because the self-join consumed the capped
-        // frame twice (re-running the signature kernel per side); with
-        // the single fused operator the ≤32 bucket lists emit their
-        // pairs directly — no cache write, no second pass.
-        val cand = graft.plans.TopK.pairsPerKey(banded, Seq("bd", "bkey"),
-            Seq(("doc_id", true)), Seq("doc_id"), 32)
-          .select(col("x_doc_id").as("left_id"), col("y_doc_id").as("right_id"))
-          .distinct()
-        val out = cand
-          .join(shingled.select(col("doc_id").as("lid"), col("sh").as("sa")),
-            col("left_id") === col("lid"))
-          .join(shingled.select(col("doc_id").as("rid"), col("sh").as("sb")),
-            col("right_id") === col("rid"))
-          .select(col("left_id"), col("right_id"),
-            round(expr("jaccard_sim(sa, sb)"), 6).as("jaccard"))
-          .filter(col("jaccard") >= 0.5)
-          .orderBy("left_id", "right_id")
-          // The verified-pair result is tiny (pairs that LSH-collided AND
-          // pass Jaccard ≥ 0.5); cache it eagerly so warm repeats serve
-          // from the pair set instead of re-running the pipeline.
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        out.count()
-        // tracked: Verify releases after the result is written (r10)
-        graft.core.CacheLedger.track(out)
-      },
+      (s, dir) => minhashPairs(th(s, dir, "documents")),
       Some("""
         WITH tk AS (
           SELECT doc_id, string_split_regex(lower(text), '\s+') AS tk FROM documents),

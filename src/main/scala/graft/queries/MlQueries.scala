@@ -396,39 +396,7 @@ ${p}top AS (SELECT CAST(zz AS INT) AS topic,
     * sf0.1 (40 s); the capped count is the scalable shape. */
   private val linkPredictionQ = Q(
     "ml_link_prediction",
-    (s, dir) => {
-      // Persisted: deg, capped(x) and capped(y) each consume this frame
-      // — unpersisted, the orders⋈lineitem→distinct pipeline planned
-      // once per consumer (deg's c-exchange and capped's p-exchange key
-      // differently, so exchange reuse cannot dedupe them; measured A/B
-      // at sf0.1: persist 2.74 s vs stage-reuse-only 3.11 s warm).
-      // Tracked in CacheLedger; drivers release it per query.
-      val edges = graft.core.CacheLedger.track(
-        t(s, dir, "orders").select("o_orderkey", "o_custkey")
-          .join(t(s, dir, "lineitem").select("l_orderkey", "l_partkey"),
-            col("o_orderkey") === col("l_orderkey"))
-          .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-          .distinct()
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      val deg = edges.groupBy("c").agg(count(lit(1)).as("d"))
-      // Fused per-part posting cap + pair enumeration (r15, see
-      // dedup_audio_fingerprint): the 32 smallest custkeys per part
-      // (total order ⇒ same selection as the old TopK.perKey) emit
-      // their upper triangle straight from the merged heaps — one
-      // exchange, no join, no broadcast.
-      val inter = graft.plans.TopK.pairsPerKey(edges, Seq("p"),
-          Seq(("c", true)), Seq("c"), 32)
-        .select(col("x_c").as("a"), col("y_c").as("b"))
-        .groupBy("a", "b").agg(count(lit(1)).as("n_common"))
-      inter
-        .join(deg.select(col("c").as("a"), col("d").as("da")), Seq("a"))
-        .join(deg.select(col("c").as("b"), col("d").as("db")), Seq("b"))
-        .withColumn("jaccard", round(col("n_common").cast("double") /
-          (col("da") + col("db") - col("n_common")).cast("double"), 6))
-        .select("a", "b", "n_common", "jaccard")
-        .orderBy(col("jaccard").desc, col("n_common").desc, col("a"), col("b"))
-        .limit(25)
-    },
+    (s, dir) => linkPrediction(s, dir, t(s, dir, "lineitem")),
     Some("""
       WITH edges AS (
         SELECT DISTINCT o_custkey AS c, l_partkey AS p
@@ -453,6 +421,45 @@ ${p}top AS (SELECT CAST(zz AS INT) AS topic,
     doc = "Jaccard link prediction: per-part capped blocking joins count " +
       "shared parts in one cap-bounded aggregate (exact full degrees); " +
       "Liben-Nowell & Kleinberg common-neighbors family")
+
+  /** The `ml_link_prediction` pipeline over the given `lineitem` frame:
+    * customer–part edges, degrees, capped per-part pairs and the top-25
+    * Jaccard links. Also run by `ml_linkpred_slice` on its part-key
+    * slice of lineitem. */
+  private[queries] def linkPrediction(s: SparkSession, dir: String,
+      lineitem: DataFrame): DataFrame = {
+    // Persisted: deg, capped(x) and capped(y) each consume this frame
+    // — unpersisted, the orders⋈lineitem→distinct pipeline planned
+    // once per consumer (deg's c-exchange and capped's p-exchange key
+    // differently, so exchange reuse cannot dedupe them; measured A/B
+    // at sf0.1: persist 2.74 s vs stage-reuse-only 3.11 s warm).
+    // Tracked in CacheLedger; drivers release it per query.
+    val edges = graft.core.CacheLedger.track(
+      t(s, dir, "orders").select("o_orderkey", "o_custkey")
+        .join(lineitem.select("l_orderkey", "l_partkey"),
+          col("o_orderkey") === col("l_orderkey"))
+        .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
+        .distinct()
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+    val deg = edges.groupBy("c").agg(count(lit(1)).as("d"))
+    // Fused per-part posting cap + pair enumeration (r15, see
+    // dedup_audio_fingerprint): the 32 smallest custkeys per part
+    // (total order ⇒ same selection as the old TopK.perKey) emit
+    // their upper triangle straight from the merged heaps — one
+    // exchange, no join, no broadcast.
+    val inter = graft.plans.TopK.pairsPerKey(edges, Seq("p"),
+        Seq(("c", true)), Seq("c"), 32)
+      .select(col("x_c").as("a"), col("y_c").as("b"))
+      .groupBy("a", "b").agg(count(lit(1)).as("n_common"))
+    inter
+      .join(deg.select(col("c").as("a"), col("d").as("da")), Seq("a"))
+      .join(deg.select(col("c").as("b"), col("d").as("db")), Seq("b"))
+      .withColumn("jaccard", round(col("n_common").cast("double") /
+        (col("da") + col("db") - col("n_common")).cast("double"), 6))
+      .select("a", "b", "n_common", "jaccard")
+      .orderBy(col("jaccard").desc, col("n_common").desc, col("a"), col("b"))
+      .limit(25)
+  }
 
   /** Multinomial Naive Bayes train + classify, fully distributed: the
     * model is two bounded aggregates (per-(class, word) counts and class

@@ -714,11 +714,11 @@ object SimilarityQueries extends QueryBase {
       "sim_ann_recall_eval",
       (s, dir) => {
         val v = vv(th(s, dir, "embeddings"))
-        val q = broadcast(v.filter(col("vec_id") < 5)
-          .select(col("vec_id").as("qid"), col("vv").as("qv")))
+        val q = v.filter(col("vec_id") < 5)
+          .select(col("vec_id").as("qid"), col("vv").as("qv"))
         val w = Window.partitionBy("qid")
           .orderBy(col("cosine").desc, col("vec_id").asc)
-        val bf = v.crossJoin(q)
+        val bf = v.crossJoin(broadcast(q))
           .filter(col("vec_id") =!= col("qid"))
           .withColumn("cosine", cosine("qv", "vv"))
           .withColumn("rank", row_number().over(w))

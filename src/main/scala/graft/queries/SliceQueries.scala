@@ -1,15 +1,17 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Stratified-slice twins of the four heavy queries whose FULL oracles
   * DuckDB 1.0 cannot evaluate at the ×100 mint (CORRECTNESS_X100.json:
   * shingle-everything / 600M-row-distinct replays exhaust it — engine
-  * capacity, not divergence). Each twin replays the COMPLETE pipeline —
-  * same hashes, same caps, same thresholds, same verify — RESTRICTED to a
-  * deterministic ~6–12% hash-slice of its blocking domain, in BOTH
-  * engines, so result parity extends to the third decade
+  * capacity, not divergence). Each twin calls its full query's pipeline
+  * function — [[DedupQueries.minhashPairs]], [[DedupQueries.winnowPairs]],
+  * [[DedupQueries.containmentPairs]], [[MlQueries.linkPrediction]] — on a
+  * deterministic ~6–12% hash-slice of its blocking domain, so hashes,
+  * caps, thresholds and verify are the full query's by construction; only
+  * the input filter differs. Each oracle replays the same slice in
+  * DuckDB, so result parity extends to the third decade
   * (CORRECTNESS_X100_SLICE.json) where the full oracle cannot follow.
   *
   * Why the slice is CLOSED (restricting it loses no semantics inside it):
@@ -55,39 +57,9 @@ object SliceQueries extends QueryBase {
       (s, dir) => {
         val base = th(s, dir, "documents").select(col("doc_id"), col("text"))
           .filter(contentSlice)
-        val d = base.unionByName(base.filter(col("doc_id") % 10 === 0)
-          .withColumn("doc_id", col("doc_id") + 100000))
-        val shingled = d.select(col("doc_id"), DedupQueries.shingles3.as("sh"))
-        val banded = shingled.withColumn("sig", expr("minhash_sig(sh, 12)"))
-          .select(col("doc_id"), explode(transform(sequence(lit(0), lit(3)),
-            b => struct(b.as("bd"), md5(concat_ws(",",
-              element_at(col("sig"), b * 3 + 1).cast("string"),
-              element_at(col("sig"), b * 3 + 2).cast("string"),
-              element_at(col("sig"), b * 3 + 3).cast("string"))).as("bkey"))))
-            .as("b"))
-          .select(col("doc_id"), col("b.bd").as("bd"),
-            col("b.bkey").as("bkey"))
-        // Fused bucket cap + pair enumeration (r15, mirrors
-        // dedup_minhash_lsh) — also retires the bands persist the
-        // double-consuming join needed.
-        val cand = graft.plans.TopK.pairsPerKey(banded, Seq("bd", "bkey"),
-            Seq(("doc_id", true)), Seq("doc_id"), 32)
-          .select(col("x_doc_id").as("left_id"), col("y_doc_id").as("right_id"))
-          .distinct()
-        val out = cand
-          .join(shingled.select(col("doc_id").as("lid"), col("sh").as("sa")),
-            col("left_id") === col("lid"))
-          .join(shingled.select(col("doc_id").as("rid"), col("sh").as("sb")),
-            col("right_id") === col("rid"))
-          .select(col("left_id"), col("right_id"),
-            round(expr("jaccard_sim(sa, sb)"), 6).as("jaccard"))
-          .filter(col("jaccard") >= 0.5)
-          .orderBy("left_id", "right_id")
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        out.count()
-        // the returned lazy frame references this persist — tracked so
-        // Verify can release it after materializing (review r10)
-        graft.core.CacheLedger.track(out)
+        DedupQueries.minhashPairs(base.unionByName(
+          base.filter(col("doc_id") % 10 === 0)
+            .withColumn("doc_id", col("doc_id") + 100000)))
       },
       Some(s"""
         WITH base AS (
@@ -143,28 +115,9 @@ object SliceQueries extends QueryBase {
     // copies follow their source).
     Q(
       "dedup_winnowing_slice",
-      (s, dir) => {
-        val d0 = th(s, dir, "documents").filter(contentSlice)
-          .select(col("doc_id"), lower(col("text")).as("t"))
-        val d = d0.unionByName(d0.filter(col("doc_id") % 10 === 0)
-          .withColumn("doc_id", col("doc_id") + 100000))
-          .filter(length(col("t")) >= 8)
-        val hs = d.withColumn("hs", expr(
-          "transform(sequence(1, greatest(length(t) - 7, 1)), " +
-            "i -> murmur3_seeded(substring(t, i, 8), 7))"))
-        // winnow_min4 kernel (r15, mirrors dedup_winnowing).
-        val fp = hs.select(col("doc_id"),
-            explode(expr("winnow_min4(hs)")).as("h"))
-          .distinct()
-        // Fused posting cap + pair enumeration (r15, mirrors
-        // dedup_winnowing).
-        graft.plans.TopK.pairsPerKey(fp, Seq("h"),
-            Seq(("doc_id", true)), Seq("doc_id"), 32)
-          .groupBy(col("x_doc_id").as("doc_a"), col("y_doc_id").as("doc_b"))
-          .agg(count(lit(1)).as("n_shared"))
-          .orderBy(col("n_shared").desc, col("doc_a"), col("doc_b"))
-          .limit(25)
-      },
+      (s, dir) => DedupQueries.winnowPairs(
+        th(s, dir, "documents").filter(contentSlice)
+          .select(col("doc_id"), lower(col("text")).as("t"))),
       Some(s"""
         WITH d0 AS (SELECT doc_id, lower(text) AS t FROM documents
                     WHERE $contentSliceSql),
@@ -210,42 +163,9 @@ object SliceQueries extends QueryBase {
     // the slice keys on the SOURCE's content).
     Q(
       "dedup_containment_slice",
-      (s, dir) => {
-        val d = th(s, dir, "documents").select(col("doc_id"), col("text"))
-          .filter(contentSlice)
-        val frags = d.filter(col("doc_id") % 10 === 0)
-          .select((col("doc_id") + 100000L).as("doc_id"),
-            expr("array_join(slice(split(lower(text), ' '), 1, " +
-              "greatest(size(split(lower(text), ' ')) DIV 2, 5)), ' ')")
-              .as("text"))
-        def shingleHashes(df: DataFrame): DataFrame =
-          df.select(col("doc_id"), explode(DedupQueries.shingles3).as("sg"))
-            .select(col("doc_id"), h64(col("sg")).as("h"))
-            .distinct()
-        val fragH = shingleHashes(frags)
-        val corpusH = shingleHashes(d)
-          .select(col("doc_id").as("src_id"), col("h"))
-        val bottom = graft.plans.TopK.perKey(
-            fragH, Seq("doc_id"), Seq(("h", true)), 16)
-          .select("doc_id", "h")
-        // n_bottom counted from bottom itself (r15, mirrors
-        // dedup_containment_minhash): TopKPerKey keeps exactly
-        // min(16, count) rows per doc, so fragH gains a single consumer.
-        val nA = bottom.groupBy("doc_id")
-          .agg(count(lit(1)).as("n_bottom"))
-        val posting = graft.plans.TopK.perKey(
-            corpusH, Seq("h"), Seq(("src_id", true)), 32)
-          .select("src_id", "h")
-        bottom.join(posting, Seq("h"))
-          .groupBy("doc_id", "src_id").agg(count(lit(1)).as("n_match"))
-          .join(nA, Seq("doc_id"))
-          .withColumn("containment", round(
-            col("n_match").cast("double") / col("n_bottom").cast("double"), 6))
-          .filter(col("containment") >= 0.8)
-          .select(col("doc_id").as("frag_id"), col("src_id"),
-            col("n_match"), col("containment"))
-          .orderBy("frag_id", "src_id")
-      },
+      (s, dir) => DedupQueries.containmentPairs(
+        th(s, dir, "documents").select(col("doc_id"), col("text"))
+          .filter(contentSlice)),
       Some(s"""
         WITH d AS (SELECT doc_id, text FROM documents
                    WHERE $contentSliceSql),
@@ -308,33 +228,8 @@ object SliceQueries extends QueryBase {
     // pre-distinct edge replay at x100 to ~75M — the x10-proven volume.
     Q(
       "ml_linkpred_slice",
-      (s, dir) => {
-        // Persisted: deg and capped both consume the edges frame (same
-        // rationale as the full ml_link_prediction).
-        val edges = graft.core.CacheLedger.track(
-          t(s, dir, "orders").select("o_orderkey", "o_custkey")
-            .join(t(s, dir, "lineitem").select("l_orderkey", "l_partkey")
-                .filter(col("l_partkey") % 8 === 3),
-              col("o_orderkey") === col("l_orderkey"))
-            .select(col("o_custkey").as("c"), col("l_partkey").as("p"))
-            .distinct()
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-        val deg = edges.groupBy("c").agg(count(lit(1)).as("d"))
-        // Fused posting cap + pair enumeration (r15, mirrors
-        // ml_link_prediction).
-        val inter = graft.plans.TopK.pairsPerKey(edges, Seq("p"),
-            Seq(("c", true)), Seq("c"), 32)
-          .select(col("x_c").as("a"), col("y_c").as("b"))
-          .groupBy("a", "b").agg(count(lit(1)).as("n_common"))
-        inter
-          .join(deg.select(col("c").as("a"), col("d").as("da")), Seq("a"))
-          .join(deg.select(col("c").as("b"), col("d").as("db")), Seq("b"))
-          .withColumn("jaccard", round(col("n_common").cast("double") /
-            (col("da") + col("db") - col("n_common")).cast("double"), 6))
-          .select("a", "b", "n_common", "jaccard")
-          .orderBy(col("jaccard").desc, col("n_common").desc, col("a"), col("b"))
-          .limit(25)
-      },
+      (s, dir) => MlQueries.linkPrediction(s, dir,
+        t(s, dir, "lineitem").filter(col("l_partkey") % 8 === 3)),
       Some("""
         WITH edges AS (
           SELECT DISTINCT o_custkey AS c, l_partkey AS p

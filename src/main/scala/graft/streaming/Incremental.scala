@@ -17,6 +17,22 @@ import org.apache.spark.sql.types.StructType
   */
 object Incremental {
 
+  /** Milliseconds in a watermark horizon such as "10 minutes"; a horizon
+    * in months has no fixed length and is rejected. */
+  private def horizonMs(late: String): Long = {
+    val iv = org.apache.spark.sql.catalyst.util.IntervalUtils
+      .stringToInterval(
+        org.apache.spark.unsafe.types.UTF8String.fromString(late))
+    require(iv.months == 0, s"horizon '$late' must not use months")
+    iv.days * 86400000L + iv.microseconds / 1000L
+  }
+
+  /** Epoch microseconds of a timestamp, the unit of the state ledgers. */
+  private def micros(ts: java.sql.Timestamp): Long = {
+    val inst = ts.toInstant
+    inst.getEpochSecond * 1000000L + inst.getNano / 1000L
+  }
+
   /** File-stream source over a parquet table directory with an enforced
     * schema (the streaming analog of graft.core.Tables.load). */
   def readStream(spark: SparkSession, dir: String, schema: StructType): DataFrame =
@@ -104,8 +120,7 @@ object Incremental {
     var maxUs = prior.maxArrivalUs
     val flags = scala.collection.mutable.ArrayBuffer.empty[PhashNearDup]
     arrivals.sortBy(a => (a.arrival.getTime, a.media_id)).foreach { a =>
-      val us = a.arrival.toInstant.getEpochSecond * 1000000L +
-        a.arrival.toInstant.getNano / 1000L
+      val us = micros(a.arrival)
       if (us > maxUs) maxUs = us
       var bestHam = 4
       var bestId = Long.MaxValue
@@ -155,13 +170,7 @@ object Incremental {
       cap: Int = 32): DataFrame = {
     val spark = media.sparkSession
     import spark.implicits._
-    val horizonMs = {
-      val iv = org.apache.spark.sql.catalyst.util.IntervalUtils
-        .stringToInterval(
-          org.apache.spark.unsafe.types.UTF8String.fromString(late))
-      require(iv.months == 0, s"horizon '$late' must not use months")
-      iv.days * 86400000L + iv.microseconds / 1000L
-    }
+    val horizon = horizonMs(late)
     phashBands(
         graft.multimodal.Multimodal.imageDHashStamped(media)
           .withWatermark("arrival", late))
@@ -177,7 +186,7 @@ object Incremental {
               .getOrElse(PhashBucketState(Nil, Nil, 0L))
             val (flags, next) = phashAdmit(it.toSeq, prior, cap)
             state.update(next)
-            state.setTimeoutTimestamp(next.maxArrivalUs / 1000L + horizonMs)
+            state.setTimeoutTimestamp(next.maxArrivalUs / 1000L + horizon)
             flags.iterator
           }
       }
@@ -231,8 +240,7 @@ object Incremental {
     var maxUs = prior.map(_.maxArrivalUs).getOrElse(0L)
     val flags = scala.collection.mutable.ArrayBuffer.empty[TextNearDup]
     arrivals.sortBy(a => (a.arrival.getTime, a.doc_id)).foreach { a =>
-      val us = a.arrival.toInstant.getEpochSecond * 1000000L +
-        a.arrival.toInstant.getNano / 1000L
+      val us = micros(a.arrival)
       if (us > maxUs) maxUs = us
       if (keeper < 0) keeper = a.doc_id
       else if (a.doc_id != keeper)
@@ -242,24 +250,15 @@ object Incremental {
   }
 
   /** Explode (doc_id, arrival, text) into the 4×3 MinHash band keys of
-    * the batch `dedup_minhash_lsh` blocking — same word-3-shingles,
-    * same compiled `minhash_sig` kernel, same md5 band keys, so a doc
-    * the batch job would bucket with an earlier doc collides with it
-    * here too. */
-  private def minhashBands(docs: DataFrame): DataFrame = {
-    docs
-      .select(col("doc_id"), col("arrival"),
-        graft.queries.DedupQueries.shingles3.as("sh"))
-      .select(col("doc_id"), col("arrival"),
-        expr("minhash_sig(sh, 12)").as("sig"))
-      .select(col("doc_id"), col("arrival"),
-        posexplode(transform(sequence(lit(0), lit(3)),
-          b => md5(concat_ws(",",
-            element_at(col("sig"), b * 3 + 1).cast("string"),
-            element_at(col("sig"), b * 3 + 2).cast("string"),
-            element_at(col("sig"), b * 3 + 3).cast("string")))))
-          .as(Seq("band", "bkey")))
-  }
+    * the batch `dedup_minhash_lsh` blocking — its own word-3-shingles
+    * and band derivation ([[graft.queries.DedupQueries.minhashBands]]),
+    * so a doc the batch job would bucket with an earlier doc collides
+    * with it here too. */
+  private def minhashBands(docs: DataFrame): DataFrame =
+    graft.queries.DedupQueries.minhashBands(
+        docs.select(col("doc_id"), col("arrival"),
+          graft.queries.DedupQueries.shingles3.as("sh")))
+      .withColumnRenamed("bd", "band")
 
   /** Streaming near-dup admission for TEXT (r12 verdict item 4) — the
     * text analog of [[imageNearDupGateStream]], upgrading the exact-hash
@@ -295,13 +294,7 @@ object Incremental {
   def textNearDupGateStream(docs: DataFrame, late: String): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    val horizonMs = {
-      val iv = org.apache.spark.sql.catalyst.util.IntervalUtils
-        .stringToInterval(
-          org.apache.spark.unsafe.types.UTF8String.fromString(late))
-      require(iv.months == 0, s"horizon '$late' must not use months")
-      iv.days * 86400000L + iv.microseconds / 1000L
-    }
+    val horizon = horizonMs(late)
     minhashBands(docs.withWatermark("arrival", late))
       .as[MinhashArrival]
       .groupByKey(a => (a.band, a.bkey))
@@ -313,7 +306,7 @@ object Incremental {
           else {
             val (flags, next) = minhashAdmit(it.toSeq, state.getOption)
             state.update(next)
-            state.setTimeoutTimestamp(next.maxArrivalUs / 1000L + horizonMs)
+            state.setTimeoutTimestamp(next.maxArrivalUs / 1000L + horizon)
             flags.iterator
           }
       }
@@ -443,10 +436,7 @@ object Incremental {
             state: GroupState[(Long, Long, Long)]) =>
           var (t1, t2, t3) = state.getOption.getOrElse((-1L, -1L, -1L))
           it.toSeq
-            .map { case (_, ts, tpe) =>
-              val inst = ts.toInstant
-              (inst.getEpochSecond * 1000000L + inst.getNano / 1000L, tpe)
-            }
+            .map { case (_, ts, tpe) => (micros(ts), tpe) }
             .sortBy(identity)
             .foreach { case (t, tpe) =>
               tpe match {
@@ -488,10 +478,7 @@ object Incremental {
             state: GroupState[(Long, Long, Long)]) =>
           var (a0, a1, n) = state.getOption.getOrElse((-510826L, -916291L, 0L))
           it.toSeq
-            .map { case (_, ts, id, tpe) =>
-              val inst = ts.toInstant
-              (inst.getEpochSecond * 1000000L + inst.getNano / 1000L, id, tpe)
-            }
+            .map { case (_, ts, id, tpe) => (micros(ts), id, tpe) }
             .sortBy(x => (x._1, x._2))
             .foreach { case (_, _, tpe) =>
               val e0 = tpe match {
