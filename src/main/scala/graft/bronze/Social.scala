@@ -66,8 +66,10 @@ object Social {
     // explode — a union of toplevel/reply branches would re-parse every
     // payload twice (the parse dominates at capture scale).
     val c = col("c")
-    def leaf(n: Column, respTo: Column): Column = struct(
-      commentId(n.getField("id")).as("comment_id"),
+    // The parent's id, projected once (`cid`), not re-split per reply.
+    val cid = col("cid")
+    def leaf(n: Column, id: Column, respTo: Column): Column = struct(
+      id.as("comment_id"),
       n.getField("created_time").as("post_date"),
       n.getField("message").as("text"),
       isFromMuseum(n.getField("from"), museumName).as("is_from_museum"),
@@ -78,15 +80,17 @@ object Social {
     val replies = when(
       c.getField("comment_count") > 0 && c.getField("comments").isNotNull,
       transform(c.getField("comments").getField("data"),
-        r => leaf(r, commentId(c.getField("id")))))
+        r => leaf(r, commentId(r.getField("id")), cid)))
       .otherwise(emptyLeafs)
     batches
       .select(col("page_id"), col("post_id"),
         explode(from_json(col("payload"), fbCommentsSchema)
           .getField("data")).as("c"))
+      .select(col("page_id"), col("post_id"), c,
+        commentId(c.getField("id")).as("cid"))
       .select(col("page_id"), col("post_id"),
         explode(concat(
-          array(leaf(c, lit(null).cast(StringType))), replies)).as("e"))
+          array(leaf(c, cid, lit(null).cast(StringType))), replies)).as("e"))
       .select(col("post_id"), col("e.comment_id").as("comment_id"),
         col("page_id"), col("e.post_date").as("post_date"),
         col("e.text").as("text"),

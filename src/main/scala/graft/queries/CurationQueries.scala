@@ -35,8 +35,22 @@ object CurationDefs {
   val ChunkStride = 24
   val ChunkMinTail = 8
 
-  /** Lowercased whitespace tokens of `text` (the curation tokenizer). */
+  /** Lowercased whitespace tokens of `text` (the curation tokenizer).
+    * Project it (`toks.as("tk")`) before a lambda indexes it: a
+    * `transform` body runs interpreted per element, with no common
+    * subexpressions, so a tokenizer inside it re-splits the whole text. */
   def toks: Column = split(lower(col("text")), "\\s+")
+
+  /** Space-joined word-`n`-grams of the token array `tk`, in order with
+    * repeats and `""` tokens kept; empty below `n` tokens. `tk` must be a
+    * projected column, never a tokenizer (see [[toks]]): the lambda reads
+    * it `n` times per element. */
+  def wordNgrams(tk: Column, n: Int): Column =
+    when(size(tk) >= n,
+      transform(sequence(lit(1), size(tk) - (n - 1)), i =>
+        concat_ws(" ", (0 until n).map(j =>
+          element_at(tk, if (j == 0) i else i + j)): _*)))
+      .otherwise(array().cast("array<string>"))
 
   /** Adjacent-token bigram pairs of token array `t` as
     * array<struct<w1,w2>> (empty below 2 tokens) — shared by the LM
@@ -82,19 +96,6 @@ object CurationQueries extends QueryBase {
         .filter(expr(s"repetition_keep(t, $DupMax, $TopMax)")))
   }
 
-  /** Distinct word-5-grams of lower(text) — decontamination standard
-    * practice probes long n-grams so natural re-use doesn't false-flag. */
-  private def ngrams5(c: Column): Column = {
-    val tk = split(lower(c), "\\s+")
-    array_distinct(
-      when(size(tk) >= 5,
-        transform(sequence(lit(1), size(tk) - 4),
-          i => concat_ws(" ", element_at(tk, i), element_at(tk, i + 1),
-            element_at(tk, i + 2), element_at(tk, i + 3),
-            element_at(tk, i + 4))))
-        .otherwise(array().cast("array<string>")))
-  }
-
   val all: Seq[Q] = Seq(
     // Benchmark decontamination: flag training docs sharing >= 3 distinct
     // word-5-grams with a held-out eval set. The fixture plants real
@@ -116,9 +117,10 @@ object CurationQueries extends QueryBase {
           .unionByName(eval.select(
             (col("doc_id") + 100000L).as("doc_id"),
             concat(lit("leak marker "), col("text")).as("text")))
-        val evalGrams = eval
-          .select(explode(ngrams5(col("text"))).as("ng")).distinct()
-        corpus.select(col("doc_id"), explode(ngrams5(col("text"))).as("ng"))
+        // Distinct word-5-grams: long, so natural re-use doesn't false-flag.
+        val ngrams5 = explode(array_distinct(wordNgrams(col("tk"), 5))).as("ng")
+        val evalGrams = eval.select(toks.as("tk")).select(ngrams5).distinct()
+        corpus.select(col("doc_id"), toks.as("tk")).select(col("doc_id"), ngrams5)
           .join(broadcast(evalGrams), Seq("ng"))
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_hits"))

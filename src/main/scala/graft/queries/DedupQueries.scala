@@ -86,18 +86,11 @@ object DedupQueries extends QueryBase {
     graft.core.CacheLedger.track(out)
   }
 
-  /** Distinct word-3-shingles of lower(text) (shared by the minhash and
-    * containment pipelines and the streaming near-dup admission gate in
-    * [[graft.streaming.Incremental]]). */
-  private[graft] def shingles3: Column = {
-    val tk = split(lower(col("text")), "\\s+")
-    array_distinct(
-      when(size(tk) >= 3,
-        transform(sequence(lit(1), size(tk) - 2),
-          i => concat_ws(" ", element_at(tk, i), element_at(tk, i + 1),
-            element_at(tk, i + 2))))
-        .otherwise(array().cast("array<string>")))
-  }
+  /** Distinct word-3-shingles of a projected token column (see
+    * [[CurationDefs.wordNgrams]]); shared by the minhash and containment
+    * pipelines and the streaming text gate in [[graft.streaming.Incremental]]. */
+  private[graft] def shingles3(tk: Column): Column =
+    array_distinct(CurationDefs.wordNgrams(tk, 3))
 
   /** The 4×3 MinHash band keys of shingled documents: a 12-hash
     * `minhash_sig` per doc, cut into 4 bands of 3 rows, each band's key
@@ -127,7 +120,8 @@ object DedupQueries extends QueryBase {
     * verify, persisted, counted and tracked. Also run by
     * `dedup_minhash_slice` on its content slice. */
   private[queries] def minhashPairs(d: DataFrame): DataFrame = {
-    val shingled = d.select(col("doc_id"), shingles3.as("sh"))
+    val shingled = d.select(col("doc_id"), CurationDefs.toks.as("tk"))
+      .select(col("doc_id"), shingles3(col("tk")).as("sh"))
     // Probe cap (see dedup_embedding_cosine): near-identical template
     // docs collide on whole signatures, so an uncapped bucket join
     // goes quadratic in the hottest bucket.
@@ -177,10 +171,12 @@ object DedupQueries extends QueryBase {
     "dedup_paragraphs",
     (s, dir) => {
       val d = th(s, dir, "documents").select("doc_id", "text")
-      val segs = d.select(col("doc_id"), posexplode(expr(
-        "transform(sequence(0, (size(split(text, ' ')) - 1) DIV 10), " +
-          "i -> array_join(slice(split(text, ' '), i * 10 + 1, 10), ' '))"))
-        .as(Seq("idx", "seg")))
+      // Words projected once, not per segment (see CurationDefs.toks).
+      val segs = d.selectExpr("doc_id", "split(text, ' ') AS tk")
+        .select(col("doc_id"), posexplode(expr(
+          "transform(sequence(0, (size(tk) - 1) DIV 10), " +
+            "i -> array_join(slice(tk, i * 10 + 1, 10), ' '))"))
+          .as(Seq("idx", "seg")))
       // Keep-first = top-1 per segment hash: TopKPerKey with k=1 (total
       // order (doc_id, idx)) — a bounded single-slot heap per segment
       // instead of sorting every duplicate group.
@@ -608,7 +604,8 @@ object DedupQueries extends QueryBase {
           "greatest(size(split(lower(text), ' ')) DIV 2, 5)), ' ')")
           .as("text"))
     def shingleHashes(df: DataFrame): DataFrame =
-      df.select(col("doc_id"), explode(shingles3).as("sg"))
+      df.select(col("doc_id"), CurationDefs.toks.as("tk"))
+        .select(col("doc_id"), explode(shingles3(col("tk"))).as("sg"))
         .select(col("doc_id"), h64(col("sg")).as("h"))
         .distinct()
     val fragH = shingleHashes(frags)

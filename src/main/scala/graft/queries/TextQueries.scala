@@ -654,18 +654,13 @@ object TextQueries extends QueryBase {
       "text_ngram_phrases",
       (s, dir) => {
         val d = th(s, dir, "documents")
-        // Guard: sequence(1, 0) would step BACKWARD in Spark; emit an empty
-        // index list for single-token docs instead.
-        val bigrams = when(size(toks) >= 2,
-          transform(
-            sequence(lit(1), size(toks) - 1),
-            i => concat_ws(" ", element_at(toks, i), element_at(toks, i + 1))))
-          .otherwise(array().cast("array<string>"))
         // Two-phase distinct: partial-agg on (phrase, doc_id) collapses
         // repeats map-side, then a small second agg — a direct
         // count+countDistinct would Expand the 1M-row explode 2x into one
         // shuffle (2.5x slower here, worse at scale).
-        d.select(col("doc_id"), explode(bigrams).as("phrase"))
+        d.select(col("doc_id"), toks.as("tk"))
+          .select(col("doc_id"),
+            explode(CurationDefs.wordNgrams(col("tk"), 2)).as("phrase"))
           .groupBy("phrase", "doc_id")
           .agg(count(lit(1)).as("c"))
           .groupBy("phrase")

@@ -257,7 +257,9 @@ object Incremental {
   private def minhashBands(docs: DataFrame): DataFrame =
     graft.queries.DedupQueries.minhashBands(
         docs.select(col("doc_id"), col("arrival"),
-          graft.queries.DedupQueries.shingles3.as("sh")))
+            graft.queries.CurationDefs.toks.as("tk"))
+          .select(col("doc_id"), col("arrival"),
+            graft.queries.DedupQueries.shingles3(col("tk")).as("sh")))
       .withColumnRenamed("bd", "band")
 
   /** Streaming near-dup admission for TEXT (r12 verdict item 4) — the

@@ -201,4 +201,41 @@ class CurationOpsSpec extends SparkSpec {
     // weights must discriminate, not collapse to a constant
     assert(got.values.map(_._1).toSet.size > 1)
   }
+
+  test("wordNgrams edge cases at n = 2, 3 and 5, with and without distinct") {
+    import org.apache.spark.sql.functions.{array_distinct, col}
+    import graft.queries.CurationDefs.wordNgrams
+    // text -> its n = 2, 3, 5 grams in order, repeats kept. Leading and
+    // trailing whitespace split to "" tokens, which concat_ws keeps.
+    val want: Seq[(String, Seq[Seq[String]])] = Seq(
+      "" -> Seq(Nil, Nil, Nil),
+      "a b" -> Seq(Seq("a b"), Nil, Nil),
+      "a b c" -> Seq(Seq("a b", "b c"), Seq("a b c"), Nil),
+      " A  b\tc " -> Seq(Seq(" a", "a b", "b c", "c "),
+        Seq(" a b", "a b c", "b c "), Seq(" a b c ")),
+      "The cat the CAT the cat" -> Seq(
+        Seq("the cat", "cat the", "the cat", "cat the", "the cat"),
+        Seq("the cat the", "cat the cat", "the cat the", "cat the cat"),
+        Seq("the cat the cat the", "cat the cat the cat")))
+    val ns = Seq(2, 3, 5)
+    val rows = spark.createDataFrame(want.map(w => Tuple1(w._1))).toDF("text")
+      .select(col("text"), graft.queries.CurationDefs.toks.as("tk"))
+      .select(col("text") +: ns.flatMap { n =>
+        val g = wordNgrams(col("tk"), n)
+        Seq(g, array_distinct(g))
+      }: _*)
+      .collect().map(r => r.getString(0) ->
+        ns.indices.map(k => (r.getSeq[String](1 + 2 * k),
+          r.getSeq[String](2 + 2 * k)))).toMap
+    want.foreach { case (text, grams) =>
+      ns.indices.foreach { k =>
+        val (raw, distinct) = rows(text)(k)
+        assert(raw === grams(k), s"'$text' n=${ns(k)}")
+        assert(distinct === grams(k).distinct, s"'$text' n=${ns(k)} distinct")
+      }
+    }
+    assert(rows("The cat the CAT the cat").map(_._2) === Seq(
+      Seq("the cat", "cat the"), Seq("the cat the", "cat the cat"),
+      Seq("the cat the cat the", "cat the cat the cat")))
+  }
 }

@@ -1,6 +1,7 @@
 package graft
 
 import graft.queries.Catalog
+import org.apache.spark.sql.catalyst.expressions._
 
 /** Physical-plan shape regressions — the properties that make the catalog
   * hold up at 100 TB, asserted so a future edit can't silently trade them
@@ -40,17 +41,44 @@ class PlanSpec extends SparkSpec {
     assert(!p.contains("CartesianProduct"))
   }
 
+  /** Maximal subtrees of a lambda body that do not depend on the lambda's
+    * variables, are not a bare column or constant, and tokenize or
+    * case-fold text: an interpreted `transform` body re-runs such a
+    * subtree for every element instead of once per row. */
+  private def invariantTokenizers(e: Expression): Seq[Expression] = {
+    def tokenizer(x: Expression): Boolean = x match {
+      case _: StringSplit | _: Lower | _: Upper => true
+      case _ => x.getClass.getSimpleName.startsWith("RegExp")
+    }
+    e match {
+      case _: Attribute | _: Literal => Nil
+      case _ if !e.exists(_.isInstanceOf[NamedLambdaVariable]) =>
+        if (!e.foldable && e.exists(tokenizer)) Seq(e) else Nil
+      case _ => e.children.flatMap(invariantTokenizers)
+    }
+  }
+
   test("no cartesian products in any catalog plan") {
     // The dedup/similarity self-joins must stay keyed (band/bucket
     // equi-joins); pattern cross joins must broadcast their 2-row dim.
     // The two driver-fit ML stages execute eagerly at plan-build time, so
     // they are exercised implicitly (their final frames are tiny).
-    Catalog.all.foreach { q =>
-      val p = Catalog.byName(q.name).spark(spark, dir)
-        .queryExecution.executedPlan.toString
-      assert(!p.contains("CartesianProduct"),
+    // The same sweep checks that no lambda body tokenizes its row's text:
+    // the token array is projected once, before the lambda indexes it.
+    val tokenizing = Catalog.all.flatMap { q =>
+      val plan = Catalog.byName(q.name).spark(spark, dir)
+        .queryExecution.executedPlan
+      assert(!plan.toString.contains("CartesianProduct"),
         s"${q.name} contains a cartesian product")
+      val found = PlanBudget.allNodes(plan).flatMap(_.expressions)
+        .flatMap(_.collect { case h: HigherOrderFunction => h })
+        .flatMap(_.functions.collect { case l: LambdaFunction => l.function })
+        .flatMap(invariantTokenizers)
+      if (found.isEmpty) None else Some(s"${q.name}: ${found.head.sql}")
     }
+    assert(tokenizing.isEmpty,
+      "tokenizer evaluated per element inside a lambda:\n" +
+        tokenizing.mkString("\n"))
   }
 
   test("filters are pushed down to the parquet scan") {
