@@ -14,19 +14,15 @@ object ExplainExecuted {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.core.Tables.localSession(cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Pin the broadcast threshold to PlanBudget.forCatalog's value so
-      // the executed plans this tool certifies (join strategy, exchange
-      // reuse) match the budget gate's on any host (r14 ADVICE item 3).
-      .config("spark.sql.autoBroadcastJoinThreshold",
-        (10L * 1024 * 1024).toString)
-      .getOrCreate()
+    val spark = graft.core.Tables.localSession(cpus).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n========== $name ==========")
       try {
-        val df = SparkEntry.queries(name)(spark, sfDir)
+        // On the plan budget's pinned session, so the executed plans this
+        // tool certifies (join strategy, exchange reuse) match the budget
+        // gate's on any host.
+        val df = SparkEntry.queries(name)(PlanBudget.session(spark), sfDir)
         // collect() drives THIS QueryExecution (a noop write would plan
         // a fresh one), so the AdaptiveSparkPlan below prints its FINAL
         // runtime shape (isFinalPlan=true, ReusedExchange/AQEShuffleRead

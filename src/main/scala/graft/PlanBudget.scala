@@ -31,9 +31,10 @@ import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, Cartes
   *    the whitelist in `PlanBudgetSpec`, each entry carrying its proven
   *    small-side bound.
   *
-  * `PlanBudgetSpec` recomputes the counts at sf0.001 and fails any query
-  * that EXCEEDS its budget (fewer is fine — improvements just make the
-  * ratchet refresh tighter). Refresh after a deliberate plan change with
+  * `PlanBudgetSpec` reads the counts at sf0.001 from the test gate's one
+  * catalog sweep (`CatalogSweep`, which builds each query as
+  * [[forCatalog]] does) and fails any query that EXCEEDS its budget
+  * (fewer is fine — improvements just make the ratchet refresh tighter). Refresh after a deliberate plan change with
   * `scripts/run_main.sh graft.PlanBudgetProbe` and review the diff like a
   * lockfile.
   */
@@ -88,20 +89,27 @@ object PlanBudget {
       ns.count { case _: BroadcastNestedLoopJoinExec => true; case _ => false })
   }
 
-  /** Build every catalog query at `dir` and count its plan shapes.
-    * Plan-affecting session confs are pinned first so the sweep is
-    * deterministic regardless of which suite ran before it in the shared
-    * test JVM.
-    */
-  def forCatalog(spark: SparkSession, dir: String): Seq[(String, Counts)] = {
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", 10L * 1024 * 1024)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    graft.queries.Catalog.all.map { q =>
-      val df = q.spark(spark, dir)
-      q.name -> count(df.queryExecution.executedPlan)
-    }.sortBy(_._1)
+  /** A new session of `spark` with the plan-affecting confs the checked-in
+    * budget was recorded under: a query built on it plans the same
+    * whatever earlier queries set or installed in a session. Cached data
+    * is shared between sessions, so a caller that builds several queries
+    * releases [[graft.core.CacheLedger]] after each. */
+  def session(spark: SparkSession): SparkSession = {
+    val s = spark.newSession()
+    s.conf.set("spark.sql.adaptive.enabled", "true")
+    s.conf.set("spark.sql.autoBroadcastJoinThreshold", 10L * 1024 * 1024)
+    s.conf.set("spark.sql.session.timeZone", "UTC")
+    s
   }
+
+  /** Build every catalog query at `dir`, each on its own [[session]], and
+    * count its plan shapes. */
+  def forCatalog(spark: SparkSession, dir: String): Seq[(String, Counts)] =
+    graft.queries.Catalog.all.map { q =>
+      val c = count(q.spark(session(spark), dir).queryExecution.executedPlan)
+      graft.core.CacheLedger.release()
+      q.name -> c
+    }.sortBy(_._1)
 
   private val entryRe =
     """"([a-z0-9_]+)":\[(\d+),(\d+),(\d+),(\d+)\]""".r
@@ -137,8 +145,9 @@ $body}}
 
 /** `runMain graft.PlanBudgetProbe [sfDir] [outFile]` — regenerate the
   * checked-in budget after a DELIBERATE plan change. Uses the same session
-  * shape as SparkSpec (local[4], 4 shuffle partitions) so the spec's
-  * recount matches bit-for-bit.
+  * shape as SparkSpec (local[4], 4 shuffle partitions) and builds each
+  * query on a [[PlanBudget.session]], as the spec's sweep does, so the
+  * spec's counts match bit-for-bit.
   */
 object PlanBudgetProbe {
   def main(args: Array[String]): Unit = {

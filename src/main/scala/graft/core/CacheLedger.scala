@@ -10,10 +10,12 @@ import org.apache.spark.sql.DataFrame
   * relation (pipe_aspect_match's vocab×lexicon score table — the analog
   * of the reference's `aspect_match` temp table), so the builder cannot
   * unpersist; left alone those accumulate for the life of the session.
-  * Builders `track` such frames here; catalog/gate drivers (Verify) call
-  * [[release]] after materializing each query's result. Sizes are
-  * vocab-bounded KBs, so releasing is hygiene, not memory pressure —
-  * a long-lived service embedding the catalog should do the same.
+  * Builders `track` such frames here; catalog/gate drivers (Verify,
+  * Bench, BenchColdSweep, PlanBudgetProbe, ExplainExecuted and the test
+  * gate's CatalogSweep) call [[release]] after materializing each
+  * query's result. Sizes are vocab-bounded KBs, so releasing is hygiene,
+  * not memory pressure — a long-lived service embedding the catalog
+  * should do the same.
   */
 object CacheLedger {
   private val live = scala.collection.mutable.ArrayBuffer.empty[DataFrame]

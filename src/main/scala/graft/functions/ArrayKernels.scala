@@ -156,13 +156,14 @@ object ArrayKernelOps {
     if (gn < 4) emptyLongs else winnowDistinctMinima(g, gn)
   }
 
-  /** Winnow w=4 distinct minima over a hash sequence — value-identical
-    * to dedup_winnowing's `array_distinct(transform(sequence(1,
-    * greatest(size(hs) - 3, 1)), j -> array_min(slice(hs, j, 4))))`:
-    * for n >= 4 the full windows; for 1 <= n < 4 the single truncated
-    * window (= min of the whole array), matching slice's end
-    * truncation. Type-preserving (int murmur3 hashes stay 4-byte on
-    * the posting exchange). */
+  /** Winnow w=4 distinct minima over a hash sequence — for n >= 1
+    * value-identical to dedup_winnowing's `array_distinct(transform(
+    * sequence(1, greatest(size(hs) - 3, 1)), j -> array_min(slice(hs, j,
+    * 4))))`: for n >= 4 the full windows; for 1 <= n < 4 the single
+    * truncated window (= min of the whole array), matching slice's end
+    * truncation. For n = 0 it returns `[]` where that chain returns
+    * `[null]`. Type-preserving (int murmur3 hashes stay 4-byte on the
+    * posting exchange). */
   def winnowMin4(hs: ArrayData): ArrayData = {
     val n = hs.numElements()
     if (n == 0) return emptyLongs
@@ -495,7 +496,8 @@ case class AudioWinnowFps(child: Expression) extends UnaryExpression {
 }
 
 /** `winnow_min4(array<int|long>) → array<same>` — distinct w=4 window
-  * minima, type-preserving (see [[ArrayKernelOps.winnowMin4]]). */
+  * minima, type-preserving; `[]` on an empty array (see
+  * [[ArrayKernelOps.winnowMin4]]). */
 case class WinnowMin4(child: Expression) extends UnaryExpression {
   override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
     case ArrayType(LongType, _) | ArrayType(IntegerType, _) =>

@@ -3,9 +3,7 @@ package graft
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.internal.StaticSQLConf
 
-import graft.queries.Catalog
-
-/** Executes EVERY catalog query with whole-stage-codegen fallback
+/** Every catalog query executes with whole-stage-codegen fallback
   * DISABLED (`spark.sql.codegen.fallback=false`).
   *
   * A generated class that fails to compile (Janino's 64 KB method
@@ -14,14 +12,13 @@ import graft.queries.Catalog
   * correct while a corpus-sized stage quietly runs ~10-100× slower at
   * scale. The ×10 gate caught exactly that on the N7 band-key stage
   * (1,024 inline mul-add terms in one Project; fixed by the compiled
-  * `band_keys_l` kernel — SCALE.md §whole-stage-codegen-guard). This
-  * sweep makes the failure loud forever: with fallback off, a compile
-  * failure throws instead of demoting, so a config-scaled expression
-  * chain cannot re-enter the catalog unnoticed.
+  * `band_keys_l` kernel — SCALE.md §whole-stage-codegen-guard). With
+  * fallback off, a compile failure throws instead of demoting, so a
+  * config-scaled expression chain cannot re-enter the catalog unnoticed.
   *
   * Execution (not just planning) is required — codegen compiles lazily
-  * at first execute. sf0.001 keeps the sweep to ~2-4 min; the noop sink
-  * forces the full plan like Bench does.
+  * at first execute. [[CatalogSweep]] runs every query that way, through
+  * the noop sink, once per test JVM; the first case reads its failures.
   *
   * The second case pins the other side of codegen cost: a query run
   * again after many other compiles must reuse its cached classes, which
@@ -29,30 +26,15 @@ import graft.queries.Catalog
   */
 class CodegenStrictSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
-
   test("every catalog query executes with codegen fallback disabled") {
-    val prev = spark.conf.get("spark.sql.codegen.fallback", "true")
-    spark.conf.set("spark.sql.codegen.fallback", "false")
-    try {
-      val failures = Catalog.all.flatMap { q =>
-        val r =
-          try {
-            q.spark(spark, dir).write.format("noop").mode("overwrite").save()
-            None
-          } catch {
-            case e: Throwable =>
-              Some(q.name -> e.toString.linesIterator.take(3).mkString(" "))
-          }
-        graft.core.CacheLedger.release()
-        r
-      }
-      assert(failures.isEmpty,
-        s"${failures.size} queries cannot run without codegen fallback " +
-          "(a generated class failed to compile — move the offending " +
-          "expression chain into a compiled kernel):\n" +
-          failures.map { case (n, m) => s"  $n: $m" }.mkString("\n"))
-    } finally spark.conf.set("spark.sql.codegen.fallback", prev)
+    val failures = CatalogSweep.failures.map { case (n, e) =>
+      n -> e.toString.linesIterator.take(3).mkString(" ")
+    }
+    assert(failures.isEmpty,
+      s"${failures.size} queries cannot run without codegen fallback " +
+        "(a generated class failed to compile — move the offending " +
+        "expression chain into a compiled kernel):\n" +
+        failures.map { case (n, m) => s"  $n: $m" }.mkString("\n"))
   }
 
   test("a query's generated classes survive more than Spark's default " +

@@ -1,16 +1,17 @@
 package graft
 
 import graft.PlanBudget.Counts
-import graft.queries.Catalog
 
 /** Scale guard: no catalog query may silently gain a shuffle, a broadcast,
   * or an O(n·m) join shape.
   *
   * The bench gate catches a query getting slower at sf0.1; an extra
   * exchange hides inside that timing noise locally and only shows up as a
-  * full corpus repartition at 100 TB. This spec recomputes every query's
+  * full corpus repartition at 100 TB. This spec reads every query's
   * pre-execution physical-plan shape counts (see [[graft.PlanBudget]])
-  * and ratchets them against the checked-in `docs/PLAN_BUDGET.json`:
+  * from [[CatalogSweep]], which builds each query the way
+  * `PlanBudgetProbe` does, and ratchets them against the checked-in
+  * `docs/PLAN_BUDGET.json`:
   *
   *  - EXCEEDING a budget row fails — if the extra exchange is deliberate,
   *    refresh with `scripts/run_main.sh graft.PlanBudgetProbe` and review
@@ -27,19 +28,17 @@ import graft.queries.Catalog
   */
 class PlanBudgetSpec extends SparkSpec {
 
-  private val dir = "/root/testdata/sf0.001"
-
   private lazy val budget: Map[String, Counts] =
     PlanBudget.parse("docs/PLAN_BUDGET.json")
 
   private lazy val now: Seq[(String, Counts)] =
-    PlanBudget.forCatalog(spark, dir)
+    CatalogSweep.plans.map { case (n, p) => n -> p.budget }.sortBy(_._1)
 
   test("budget file exists and covers the whole catalog") {
     assert(budget.nonEmpty,
       "docs/PLAN_BUDGET.json missing or unparseable — regenerate with " +
         "scripts/run_main.sh graft.PlanBudgetProbe")
-    val unbudgeted = Catalog.all.map(_.name).toSet -- budget.keySet
+    val unbudgeted = CatalogSweep.queries.map(_.name).toSet -- budget.keySet
     assert(unbudgeted.isEmpty,
       s"catalog queries without a plan budget (run PlanBudgetProbe and " +
         s"review the new rows): ${unbudgeted.toSeq.sorted.mkString(", ")}")

@@ -1,8 +1,5 @@
 package graft
 
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window}
-import graft.queries.Catalog
-
 /** Scale guard: no catalog query may run a corpus-sized window over
   * SinglePartition.
   *
@@ -17,18 +14,17 @@ import graft.queries.Catalog
   * something other than the corpus — so the next contributor cannot
   * silently reintroduce a corpus-sized one.
   *
-  * The sweep walks every catalog query's OPTIMIZED logical plan (window
-  * partitioning survives optimization unchanged; physical planning maps
-  * empty partitionSpec 1:1 to a SinglePartition WindowExec), collects
-  * `Window` nodes with an empty partitionSpec, and asserts the offender
-  * multiset equals the allowlist below. Every allowlist entry names its
-  * bound: the row count feeding the window is a CONSTANT (seeds, reps,
-  * quantile grid, vocabulary cap) or calendar-bounded (days between
-  * fixture min/max dates), never proportional to table size.
+  * [[CatalogSweep]] counts the `Window` nodes with an empty partitionSpec
+  * in every catalog query's OPTIMIZED logical plan (window partitioning
+  * survives optimization unchanged; physical planning maps empty
+  * partitionSpec 1:1 to a SinglePartition WindowExec), and this spec
+  * asserts the offender multiset equals the allowlist below. Every
+  * allowlist entry names its bound: the row count feeding the window is
+  * a CONSTANT (seeds, reps, quantile grid, vocabulary cap) or
+  * calendar-bounded (days between fixture min/max dates), never
+  * proportional to table size.
   */
 class UnpartitionedWindowSpec extends SparkSpec {
-
-  private val dir = "/root/testdata/sf0.001"
 
   /** query name -> (allowed unpartitioned-window count, proven bound). */
   private val allowed: Map[String, (Int, String)] = Map(
@@ -56,11 +52,9 @@ class UnpartitionedWindowSpec extends SparkSpec {
       "per-(day,dow) aggregate series, ROWS -3..3: calendar-bounded"))
 
   test("every unpartitioned window sits on a proven-bounded frame") {
-    val offenders: Map[String, Int] = Catalog.all.flatMap { q =>
-      val plan: LogicalPlan = Catalog.byName(q.name).spark(spark, dir)
-        .queryExecution.optimizedPlan
-      plan.collect { case w: Window if w.partitionSpec.isEmpty => q.name }
-    }.groupBy(identity).view.mapValues(_.size).toMap
+    val offenders: Map[String, Int] = CatalogSweep.plans.collect {
+      case (n, p) if p.optimizedWindows > 0 => n -> p.optimizedWindows
+    }.toMap
 
     val unexpected = offenders.filter { case (n, c) =>
       !allowed.get(n).exists(_._1 == c)
@@ -81,10 +75,8 @@ class UnpartitionedWindowSpec extends SparkSpec {
     // every query whose analyzed plan carries ANY unpartitioned window
     // must be on the allowlist (membership only — the optimizer
     // legitimately changes instance counts by inlining/pruning).
-    val offenders: Set[String] = Catalog.all.flatMap { q =>
-      val plan: LogicalPlan = Catalog.byName(q.name).spark(spark, dir)
-        .queryExecution.analyzed
-      plan.collect { case w: Window if w.partitionSpec.isEmpty => q.name }
+    val offenders: Set[String] = CatalogSweep.plans.collect {
+      case (n, p) if p.analyzedWindows > 0 => n
     }.toSet
     val unexpected = offenders.filterNot(allowed.contains)
     assert(unexpected.isEmpty,
@@ -96,12 +88,8 @@ class UnpartitionedWindowSpec extends SparkSpec {
   test("the three RangeWindow rewrites stay free of unpartitioned windows") {
     Seq("pipe_zorder_layout", "window_rfm_scores", "window_pareto_abc")
       .foreach { name =>
-        val plan = Catalog.byName(name).spark(spark, dir)
-          .queryExecution.optimizedPlan
-        val bad = plan.collect {
-          case w: Window if w.partitionSpec.isEmpty => w
-        }
-        assert(bad.isEmpty, s"$name regressed to a SinglePartition window")
+        assert(CatalogSweep.plansOf(name).optimizedWindows == 0,
+          s"$name regressed to a SinglePartition window")
       }
   }
 }

@@ -7,7 +7,11 @@ import org.apache.spark.sql.functions._
   * SQL): `audio_winnow_fps` vs quantize→pack→filter→winnow→distinct,
   * `winnow_min4` vs the per-window array_min(slice(...)) form —
   * including the n<4 truncated-window edge, all-constant-shingle
-  * streams, and sign edges of 16-bit PCM.
+  * streams, and sign edges of 16-bit PCM. One input differs on purpose:
+  * on an empty array `winnow_min4` returns `[]` where the chain returns
+  * `[null]` (the min of one empty window). The catalog never passes
+  * one: dedup_winnowing's hash array has `greatest(length(t) - 7, 1)`
+  * elements.
   */
 class WinnowKernelSpec extends SparkSpec {
   import spark.implicits._
@@ -66,14 +70,20 @@ class WinnowKernelSpec extends SparkSpec {
       (i.toLong, Array.fill(len)(rnd.nextLong() & 0x7fffffffL).toSeq)
     }
     val df = rows.toDF("id", "hs")
-    val viaExpr = df.select(col("id"), expr(
-        "array_distinct(transform(sequence(1, greatest(size(hs) - 3, 1)), " +
-          "j -> array_min(slice(hs, j, 4))))").as("h"))
+    val chain = expr(
+      "array_distinct(transform(sequence(1, greatest(size(hs) - 3, 1)), " +
+        "j -> array_min(slice(hs, j, 4))))")
+    val viaExpr = df.select(col("id"), chain.as("h"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     val viaKernel = df
       .select(col("id"), expr("winnow_min4(hs)").as("h"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
     assert(viaKernel == viaExpr)
+    // the empty array: [] from the kernel, [null] from the chain
+    val empty = Seq(Seq.empty[Long]).toDF("hs")
+      .select(expr("winnow_min4(hs)"), chain).head()
+    assert(empty.getSeq[Long](0).isEmpty)
+    assert(empty.getSeq[java.lang.Long](1) == Seq(null))
   }
 
   test("winnow_min4 is type-preserving on array<int> (murmur3 hashes)") {
