@@ -1,8 +1,11 @@
 package graft
 
-/** Plan-inspection tool: prints the formatted physical plan of the named
-  * catalog queries (all when none named) so pushdown, pruning, broadcast
-  * choice and WholeStageCodegen coverage can be audited per query —
+/** Plan-inspection tool: for each named catalog query (all when none
+  * named) prints the initial formatted physical plan, where pushdown,
+  * pruning, broadcast choice and WholeStageCodegen coverage can be
+  * audited, then runs the query and prints its final adaptive plan, the
+  * only place runtime decisions (exchange/stage reuse, AQEShuffleRead
+  * coalescing, join-strategy rewrites) are visible —
   * `sbt "runMain graft.Explain <sfDir> [name,name,...]"`.
   */
 object Explain {
@@ -15,10 +18,21 @@ object Explain {
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { name =>
       println(s"\n========== $name ==========")
-      try println(SparkEntry.queries(name)(spark, sfDir)
-        .queryExecution.explainString(
+      try {
+        // On the plan budget's pinned session, so the plans printed here
+        // match the budget gate's on any host.
+        val df = SparkEntry.queries(name)(PlanBudget.session(spark), sfDir)
+        println(df.queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode))
-      catch { case e: Throwable => println(s"EXPLAIN FAILED: ${e.getMessage}") }
+        // collect() drives THIS QueryExecution (a noop write would plan
+        // a fresh one), so the AdaptiveSparkPlan below prints its FINAL
+        // runtime shape (isFinalPlan=true). Catalog results are bounded;
+        // this tool runs at the small sfs.
+        df.collect()
+        println(s"---------- $name: final plan ----------")
+        println(df.queryExecution.executedPlan.toString)
+      } catch { case e: Throwable => println(s"FAILED: ${e.getMessage}") }
+      graft.core.CacheLedger.release()
     }
     spark.stop()
   }

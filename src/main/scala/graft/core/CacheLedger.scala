@@ -11,7 +11,7 @@ import org.apache.spark.sql.DataFrame
   * of the reference's `aspect_match` temp table), so the builder cannot
   * unpersist; left alone those accumulate for the life of the session.
   * Builders `track` such frames here; catalog/gate drivers (Verify,
-  * Bench, BenchColdSweep, PlanBudgetProbe, ExplainExecuted and the test
+  * Bench, BenchColdSweep, PlanBudgetProbe, Explain and the test
   * gate's CatalogSweep) call [[release]] after materializing each
   * query's result. Sizes are vocab-bounded KBs, so releasing is hygiene,
   * not memory pressure — a long-lived service embedding the catalog

@@ -47,8 +47,7 @@ object ZorderSkip {
         s""""box":[$xLo,$xHi,$yLo,$yHi]}"""
   }
 
-  def run(spark: SparkSession, sfDir: String, scratch: String,
-      files: Int = 64): Result = {
+  def run(spark: SparkSession, sfDir: String, files: Int = 64): Result = {
     // Persisted: the projection + Morton interleave otherwise recomputes
     // from the lineitem scan THREE times (two repartitionByRange writes
     // plus the quantile pass) — at the ×10 scale this probe documents,
@@ -58,14 +57,8 @@ object ZorderSkip {
         col("l_partkey").as("x"), col("l_suppkey").as("y"))
       .withColumn("z", Morton.interleave16(col("x"), col("y")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val zDir = s"$scratch/zorder"
-    val nDir = s"$scratch/natural"
-    val conf = spark.sessionState.newHadoopConf()
-    Seq(zDir, nDir).foreach { d =>
-      val p = new Path(d)
-      val hfs = p.getFileSystem(conf)
-      if (hfs.exists(p)) hfs.delete(p, true)
-    }
+    val zDir = graft.sources.Sources.scratch(spark, "zorder_skip_z")
+    val nDir = graft.sources.Sources.scratch(spark, "zorder_skip_natural")
     // The z write IS "OPTIMIZE ZORDER": range-partition the z codes into
     // `files` contiguous slices, one file each. The natural twin is the
     // same write clustered by the table's own sort key.

@@ -417,15 +417,13 @@ object CurationQueries extends QueryBase {
       (s, dir) => {
         val hosts = Seq("news.example.com", "spam-ads.example.biz",
           "blog.sample.org", "cdn.tracker.net", "wiki.example.co.uk")
-        val out = graft.sources.Sources.scratchDir(dir, "webcur_pages")
+        val out = graft.sources.Sources.scratch(s, "webcur_pages")
         val frontier = t(s, dir, "documents")
           .filter(col("doc_id") % 10 === 0 && col("doc_id") < 10000)
           .select("doc_id", "text")
           .collect() // bounded fixture mint: <= 1000 pages at ANY scale
         val d = new java.io.File(out)
         d.mkdirs()
-        Option(d.listFiles()).foreach(_.foreach(f =>
-          if (f.getName.endsWith(".html")) f.delete()))
         frontier.foreach { r =>
           val id = r.getLong(0)
           val hid = ((id / 10) % 5).toInt

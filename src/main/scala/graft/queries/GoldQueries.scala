@@ -487,8 +487,7 @@ object GoldQueries extends QueryBase {
     Q(
       "join_bucketed_colocate",
       (s, dir) => {
-        val wh = new java.io.File(
-          System.getProperty("java.io.tmpdir"), "graft_bucketed").getAbsolutePath
+        val wh = graft.sources.Sources.scratch(s, "bucketed")
         def mk(name: String, df: org.apache.spark.sql.DataFrame,
             key: String): Unit = {
           s.sql(s"DROP TABLE IF EXISTS $name")

@@ -611,10 +611,7 @@ object JoinQueries extends QueryBase {
     Q(
       "join_dpp_partitioned",
       (s, dir) => {
-        val tbl = graft.sources.Sources.scratchDir(dir, "dpp_fact_tbl")
-        val p = new org.apache.hadoop.fs.Path(tbl)
-        val hfs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (hfs.exists(p)) hfs.delete(p, true) // fresh fixture per run
+        val tbl = graft.sources.Sources.scratch(s, "dpp_fact_tbl")
         // one file per month partition: repartition on the partition key
         // before the partitionBy write (the small-files guard)
         t(s, dir, "orders")

@@ -670,7 +670,7 @@ ${p}matched AS (
     Q(
       "pipe_replace_cache",
       (s, dir) => {
-        val tbl = graft.sources.Sources.scratchDir(dir, "replace_cache_tbl")
+        val tbl = graft.sources.Sources.scratch(s, "replace_cache_tbl")
         val full = t(s, dir, "orders")
           .groupBy("o_orderpriority")
           .agg(count(lit(1)).as("n_orders"),
@@ -705,10 +705,7 @@ ${p}matched AS (
     Q(
       "pipe_upsert_partitioned",
       (s, dir) => {
-        val tbl = graft.sources.Sources.scratchDir(dir, "upsert_part_tbl")
-        val p = new org.apache.hadoop.fs.Path(tbl)
-        val hfs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (hfs.exists(p)) hfs.delete(p, true) // fresh fixture per run
+        val tbl = graft.sources.Sources.scratch(s, "upsert_part_tbl")
         val pk = Seq("o_orderpriority", "o_orderkey")
         val base = t(s, dir, "orders")
           .select(col("o_orderpriority"), col("o_orderkey"),
@@ -760,10 +757,7 @@ ${p}matched AS (
     Q(
       "pipe_fill_db_daily",
       (s, dir) => {
-        val tbl = graft.sources.Sources.scratchDir(dir, "fill_db_daily_tbl")
-        val p = new org.apache.hadoop.fs.Path(tbl)
-        val hfs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-        if (hfs.exists(p)) hfs.delete(p, true) // fresh fixture per run
+        val tbl = graft.sources.Sources.scratch(s, "fill_db_daily_tbl")
         // NOT th: measured both ways at sf0.1 (r5) — an explicit
         // repartition costs more than the serial scan saves here, because
         // the upsert merge reshuffles on the PK anyway and the dominant
@@ -1389,8 +1383,7 @@ ${p}matched AS (
     Q(
       "pipe_small_file_compact",
       (s, dir) => {
-        val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-          "graft_compact").getAbsolutePath
+        val base = graft.sources.Sources.scratch(s, "compact")
         val o = t(s, dir, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice")
         o.repartition(48).write.mode("overwrite").parquet(s"$base/small")

@@ -51,15 +51,13 @@ object SourceQueries extends QueryBase {
     (s, dir) => {
       val hosts = Seq("news.example.com", "spam-ads.example.biz",
         "blog.sample.org", "cdn.tracker.net", "wiki.sample.org")
-      val out = Sources.scratchDir(dir, "outlink_pages")
+      val out = Sources.scratch(s, "outlink_pages")
       val docs = t(s, dir, "documents")
         .filter(col("doc_id") % 5 === 0 && col("doc_id") < 5000)
         .select("doc_id")
         .collect() // bounded fixture mint: <= 1000 pages at ANY scale
       val d = new java.io.File(out)
       d.mkdirs()
-      Option(d.listFiles()).foreach(_.foreach(f =>
-        if (f.getName.endsWith(".html")) f.delete()))
       docs.foreach { r =>
         val id = r.getLong(0)
         val nextHost = hosts(((id / 5) % 5 + 1).toInt % 5)
@@ -200,7 +198,7 @@ object SourceQueries extends QueryBase {
     Q(
       "src_csv_typed_scan",
       (s, dir) => {
-        val out = Sources.scratchDir(dir, "csv_docs")
+        val out = Sources.scratch(s, "csv_docs")
         t(s, dir, "documents").select(
             col("doc_id"), col("lang"), col("n_chars"), col("text"),
             to_json(slice(split(lower(col("text")), "\\s+"), 1, 3)).as("tags_json"),
@@ -252,7 +250,7 @@ object SourceQueries extends QueryBase {
     Q(
       "src_json_pages",
       (s, dir) => {
-        val out = Sources.scratchDir(dir, "json_pages")
+        val out = Sources.scratch(s, "json_pages")
         val ev = t(s, dir, "events")
           .filter(pmod(col("event_id"), lit(20L)) === 0)
           .select(col("event_id"), col("event_type"),
@@ -297,7 +295,7 @@ object SourceQueries extends QueryBase {
     Q(
       "src_catalog_geocode",
       (s, dir) => {
-        val out = Sources.scratchDir(dir, "plz_catalog")
+        val out = Sources.scratch(s, "plz_catalog")
         val withPlz = t(s, dir, "customer").withColumn("plz",
           lpad((pmod(col("c_custkey") * 7919, lit(900L)) + 100).cast("string"),
             5, "0"))
@@ -405,7 +403,7 @@ object SourceQueries extends QueryBase {
     Q(
       "src_xlsx_report",
       (s, dir) => {
-        val out = Sources.scratchDir(dir, "xlsx_report")
+        val out = Sources.scratch(s, "xlsx_report")
         val daily = t(s, dir, "events")
           .groupBy(to_date(col("ts")).as("day"))
           .agg(count(lit(1)).as("n"),
@@ -420,8 +418,6 @@ object SourceQueries extends QueryBase {
         }
         val d = new java.io.File(out)
         d.mkdirs()
-        Option(d.listFiles()).foreach(_.foreach(f =>
-          if (f.getName.endsWith(".xlsx")) f.delete()))
         val (firstHalf, secondHalf) = body.splitAt((body.size + 1) / 2)
         Xlsx.write(new java.io.File(d, "report_0.xlsx"),
           header +: firstHalf, useSharedStrings = true)
@@ -517,7 +513,7 @@ object SourceQueries extends QueryBase {
     Q(
       "src_html_scrape",
       (s, dir) => {
-        val out = Sources.scratchDir(dir, "html_orders")
+        val out = Sources.scratch(s, "html_orders")
         val sub = t(s, dir, "lineitem")
           .filter(pmod(col("l_orderkey"), lit(400L)) === 0)
           .select("l_orderkey", "l_linenumber", "l_returnflag",
@@ -556,8 +552,6 @@ object SourceQueries extends QueryBase {
           }
         val d = new java.io.File(out)
         d.mkdirs()
-        Option(d.listFiles()).foreach(_.foreach(f =>
-          if (f.getName.endsWith(".html")) f.delete()))
         sub.groupBy(_.getLong(0)).foreach { case (orderKey, lines) =>
           val tbl = "<table><tbody>" +
             lines.sortBy(_.getInt(1)).map(article).mkString("\n") +
@@ -613,7 +607,7 @@ object SourceQueries extends QueryBase {
     Q(
       "src_html_capacity",
       (s, dir) => {
-        val out = Sources.scratchDir(dir, "html_capacity")
+        val out = Sources.scratch(s, "html_capacity")
         val ks = t(s, dir, "nation")
           .select(col("n_nationkey").cast("int"))
           .collect().map(_.getInt(0)).sorted // bounded: 25 quota pages
@@ -631,8 +625,6 @@ object SourceQueries extends QueryBase {
           }
         val dOut = new java.io.File(out)
         dOut.mkdirs()
-        Option(dOut.listFiles()).foreach(_.foreach(f =>
-          if (f.getName.endsWith(".html")) f.delete()))
         ks.foreach { k =>
           val cells = (0 until (k % 4 + 2)).map { i =>
             val (d, h, m) = (i, 9 + (3 * i) % 10, 15 * (i % 4))
@@ -725,7 +717,7 @@ object SourceQueries extends QueryBase {
     Q(
       "src_csv_sink_crlf",
       (s, dir) => {
-        val out = Sources.scratchDir(dir, "csv_sink_crlf")
+        val out = Sources.scratch(s, "csv_sink_crlf")
         val planted = t(s, dir, "nation").select(
           col("n_nationkey").cast("long").as("n_nationkey"),
           col("n_name"),
@@ -775,8 +767,7 @@ object SourceQueries extends QueryBase {
     Q(
       "src_schema_evolution",
       (s, dir) => {
-        val base = new java.io.File(System.getProperty("java.io.tmpdir"),
-          "graft_schema_evo").getAbsolutePath
+        val base = Sources.scratch(s, "schema_evo")
         val o = t(s, dir, "orders")
         o.filter(col("o_orderkey") % 2 === 0)
           .select("o_orderkey", "o_totalprice")

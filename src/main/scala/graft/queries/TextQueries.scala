@@ -396,15 +396,13 @@ object TextQueries extends QueryBase {
   private val boilerplateHtmlQ = Q(
     "text_boilerplate_html",
     (s, dir) => {
-      val out = graft.sources.Sources.scratchDir(dir, "boiler_pages")
+      val out = graft.sources.Sources.scratch(s, "boiler_pages")
       val docs = t(s, dir, "documents")
         .filter(col("doc_id") % 10 === 0 && col("doc_id") < 10000)
         .select("doc_id", "text")
         .collect() // bounded fixture mint: <= 1000 pages at ANY scale
       val d = new java.io.File(out)
       d.mkdirs()
-      Option(d.listFiles()).foreach(_.foreach(f =>
-        if (f.getName.endsWith(".html")) f.delete()))
       docs.foreach { r =>
         val toks = r.getString(1).split(" ")
         val h = (toks.length + 1) / 2

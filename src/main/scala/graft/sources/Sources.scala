@@ -52,12 +52,33 @@ object Sources {
   def staticCatalog(spark: SparkSession, path: String, schema: StructType): DataFrame =
     broadcast(typedCsv(spark, path, schema))
 
-  /** Deterministic scratch dir for a source fixture derived from `sfDir`
-    * (bench/verify run the same query repeatedly — overwrite semantics). */
-  def scratchDir(sfDir: String, name: String): String = {
-    val sf = sfDir.replaceAll("[^A-Za-z0-9.]", "_")
-    s"${sys.props("java.io.tmpdir")}/graft_src_${sf}_$name"
+  /** The run's scratch directory `name`, empty: whatever an earlier call
+    * left there is deleted first, and its parent exists. Every file a
+    * query builder writes (a minted fixture, a table it reads back) goes
+    * here, so a rebuild starts from a fresh fixture.
+    *
+    * The root is `graft/` under `SparkFiles.getRootDirectory()`: the
+    * driver-local `userFiles-<uuid>` directory Spark creates per
+    * application under `spark.local.dir` and deletes when the context
+    * stops. Two applications on one host never share a path; queries
+    * built in one application share their names, which holds because no
+    * caller builds two queries' fixtures at once.
+    *
+    * A call wipes the directory, so a spec that inspects a query's files
+    * reads their path from the query's plan (a scan's `rootPaths`),
+    * never from a second call. */
+  def scratch(s: SparkSession, name: String): String = {
+    val dir = new java.io.File(scratchRoot(s), name)
+    org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    dir.getParentFile.mkdirs()
+    dir.getAbsolutePath
   }
+
+  /** The directory every [[scratch]] directory of `s`'s application sits
+    * in. */
+  def scratchRoot(s: SparkSession): String =
+    new java.io.File(org.apache.spark.SparkFiles.getRootDirectory(), "graft")
+      .getAbsolutePath
 
   /** K4: CSV sink with carriage-return normalization. The reference
     * rewrites `\r\n|\r` → `\n` in every string column before its CSV IR

@@ -7,7 +7,7 @@ import org.apache.logging.log4j.core.config.Property
 import org.apache.spark.sql.Observation
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Window}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
 import org.apache.spark.sql.functions.{count, lit}
 import scala.jdk.CollectionConverters._
 
@@ -38,6 +38,9 @@ object CatalogSweep {
 
   private val dir = "/root/testdata/sf0.001"
 
+  /** The fixture directory every query is built against. */
+  def fixtures: String = dir
+
   /** The catalog, for suites that read its names, docs or oracles. */
   def queries: Seq[Q] = Catalog.all
 
@@ -51,6 +54,7 @@ object CatalogSweep {
     *                         executed plan
     * @param tokenizers       lambda-invariant subtrees that tokenize or
     *                         case-fold text inside a lambda body, as SQL
+    * @param scanRoots        root paths of every file scan, as local paths
     * @param initial          the initial executed plan, as text
     */
   final case class Plans(
@@ -59,6 +63,7 @@ object CatalogSweep {
       optimizedWindows: Int,
       budget: PlanBudget.Counts,
       tokenizers: Seq[String],
+      scanRoots: Seq[String],
       initial: String)
 
   /** One query's outcome: `plans` is None when it did not build or plan,
@@ -99,7 +104,7 @@ object CatalogSweep {
         val plan = qe.executedPlan
         plans = Some(Plans(df.schema.size, windows(qe.analyzed),
           windows(qe.optimizedPlan), PlanBudget.count(plan), tokenizers(plan),
-          plan.toString))
+          scanRoots(plan), plan.toString))
         val n = Observation()
         df.observe(n, count(lit(1)).as("n"))
           .write.format("noop").mode("overwrite").save()
@@ -113,6 +118,11 @@ object CatalogSweep {
 
   private def windows(plan: LogicalPlan): Int =
     plan.collect { case w: Window if w.partitionSpec.isEmpty => w }.size
+
+  private def scanRoots(plan: SparkPlan): Seq[String] =
+    PlanBudget.allNodes(plan)
+      .collect { case f: FileSourceScanExec => f.relation.location.rootPaths }
+      .flatten.map(_.toUri.getPath).distinct
 
   private def tokenizers(plan: SparkPlan): Seq[String] =
     PlanBudget.allNodes(plan).flatMap(_.expressions)

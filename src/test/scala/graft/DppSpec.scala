@@ -32,14 +32,9 @@ class DppSpec extends SparkSpec {
     assert(rows.forall(_.getString(0).endsWith("-12")))
 
     // Post-execution scan metrics: the partitioned fact scan must have
-    // read exactly the December partitions, not the whole table.
-    val tbl = graft.sources.Sources.scratchDir(dir, "dpp_fact_tbl")
-    val allMonths = new java.io.File(tbl).listFiles()
-      .count(_.getName.startsWith("order_month="))
-    val decMonths = new java.io.File(tbl).listFiles()
-      .count(_.getName.matches("order_month=\\d{4}-12"))
-    assert(decMonths > 0 && decMonths < allMonths,
-      s"fixture must have prunable layout ($decMonths of $allMonths)")
+    // read exactly the December partitions, not the whole table. The
+    // table's directory is the scan's own root (building the query again
+    // would wipe it).
     val scans = PlanBudget.allNodes(df.queryExecution.executedPlan).collect {
       case s: org.apache.spark.sql.execution.FileSourceScanExec
           if s.relation.location.rootPaths.exists(
@@ -47,6 +42,12 @@ class DppSpec extends SparkSpec {
     }
     assert(scans.nonEmpty, "partitioned fact scan not found in final plan")
     val scan = scans.head
+    val tbl = new java.io.File(scan.relation.location.rootPaths.head.toUri)
+    val allMonths = tbl.listFiles().count(_.getName.startsWith("order_month="))
+    val decMonths = tbl.listFiles()
+      .count(_.getName.matches("order_month=\\d{4}-12"))
+    assert(decMonths > 0 && decMonths < allMonths,
+      s"fixture must have prunable layout ($decMonths of $allMonths)")
     assert(scan.toString.contains("dynamicpruning"),
       s"fact scan lost its dynamic partition filter:\n$scan")
     val partsRead = scan.metrics("numPartitions").value

@@ -8,7 +8,9 @@ package graft
   *  - no lambda body tokenizes its row's text (PlanBudgetSpec bans
   *    cartesian products catalog-wide);
   *  - filters reach the parquet scan (PushedFilters);
-  *  - projections prune the scan (ReadSchema carries only used columns).
+  *  - projections prune the scan (ReadSchema carries only used columns);
+  *  - every scan reads the fixtures or the run's scratch root
+  *    (`Sources.scratch`), never a fixed path another run could share.
   *
   * The plans are [[CatalogSweep]]'s, built against sf0.001 (plan shape,
   * not data, is under test).
@@ -60,5 +62,16 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("ReadSchema"))
     assert(Seq("c_name", "c_acctbal", "c_mktsegment").forall(!p.contains(_)),
       s"unpruned customer scan in:\n$p")
+  }
+
+  test("scans read only the fixtures or the run's scratch root") {
+    val roots = Seq(new java.io.File(CatalogSweep.fixtures).getAbsolutePath,
+      graft.sources.Sources.scratchRoot(spark)).map(_ + "/")
+    roots.foreach(d => assert(CatalogSweep.plans.exists(
+      _._2.scanRoots.exists(_.startsWith(d))), s"no scan under $d"))
+    val stray = for ((n, p) <- CatalogSweep.plans; r <- p.scanRoots
+      if !roots.exists(r.startsWith)) yield s"$n: $r"
+    assert(stray.isEmpty,
+      s"scans outside ${roots.mkString(" and ")}:\n" + stray.mkString("\n"))
   }
 }

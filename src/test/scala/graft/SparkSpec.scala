@@ -20,6 +20,10 @@ trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
     // Session is shared process-wide across suites; do not stop it here.
+    // Release what the suite's query builds left tracked, as the catalog
+    // drivers do between queries: a frame left cached makes the next
+    // suite's build of the same query persist already-cached data.
+    graft.core.CacheLedger.release()
     super.afterAll()
   }
 }

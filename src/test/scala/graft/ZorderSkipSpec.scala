@@ -11,10 +11,8 @@ package graft
 class ZorderSkipSpec extends SparkSpec {
 
   test("z-order layout prunes the box read; natural layout cannot") {
-    val scratch = java.nio.file.Files
-      .createTempDirectory("graft-zskip").toString
-    val r = graft.core.ZorderSkip.run(
-      spark, "/root/testdata/sf0.001", scratch, files = 32)
+    val r = graft.core.ZorderSkip.run(spark, CatalogSweep.fixtures,
+      files = 32)
     info(r.json)
     assert(r.selectedRows > 0, "the box predicate must select something")
     // Footer stats: z-order must need at most half the files the natural
