@@ -153,7 +153,7 @@ object Bench {
     val spark = graft.core.Tables.localSession(cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    graft.core.Tables.setLogLevel(spark, "WARN")
     // Own-load sampler starts BEFORE the heap/table/codegen warm-ups:
     // their load lands in 1-min loadavg, so it must land in the own-load
     // EWMA too, or the earliest timed queries inherit warm-up residue

@@ -28,7 +28,7 @@ object BenchColdSweep {
       .config("spark.sql.shuffle.partitions", shufParts)
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    graft.core.Tables.setLogLevel(spark, "WARN")
     val selected = only match {
       case Some(f) => SparkEntry.queries.filter { case (n, _) => f(n) }
       case None => SparkEntry.queries

@@ -15,7 +15,7 @@ object Explain {
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(SparkEntry.queries.keys.toSeq.sorted)
     val spark = graft.core.Tables.localSession("4").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    graft.core.Tables.setLogLevel(spark, "ERROR")
     names.foreach { name =>
       println(s"\n========== $name ==========")
       try {

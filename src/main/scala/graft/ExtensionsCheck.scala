@@ -18,7 +18,7 @@ object ExtensionsCheck {
       .config("spark.sql.extensions", "graft.functions.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    graft.core.Tables.setLogLevel(spark, "ERROR")
     def check(cond: Boolean, msg: String): Unit =
       if (!cond) { System.err.println(s"[extcheck] FAILED: $msg"); sys.exit(1) }
 

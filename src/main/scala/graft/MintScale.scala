@@ -97,7 +97,7 @@ object MintScale {
       .getOrElse(if (skew.isDefined || reseed.isDefined) 1 else 10)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = graft.core.Tables.localSession(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    graft.core.Tables.setLogLevel(spark, "WARN")
 
     val rekey: Map[String, Seq[String]] = Map(
       "orders" -> Seq("o_orderkey"),

@@ -54,21 +54,17 @@ object PlanBudget {
     * TreeNode traversal), into cached-relation plans (each distinct
     * relation expanded once — a twice-scanned persist is one plan, not
     * two), and into subquery plans (scalar subqueries, DPP filters).
-    *
-    * `throughStages = false` keeps stages as leaves. [[count]] needs
-    * that: a builder that persists and counts a frame leaves a MATERIALIZED
-    * cached plan whose exchanges sit inside stages, and the checked-in
-    * budget was recorded without them.
+    * A cache a builder materialized before the query runs holds its
+    * exchanges inside query stages, so [[count]] sees them too.
     */
-  def allNodes(root: SparkPlan, throughStages: Boolean = true)
-      : Seq[SparkPlan] = {
+  def allNodes(root: SparkPlan): Seq[SparkPlan] = {
     val seenCaches = new java.util.IdentityHashMap[AnyRef, AnyRef]()
     val out = mutable.ArrayBuffer.empty[SparkPlan]
     def walk(p: SparkPlan): Unit = p.foreach { n =>
       out += n
       n match {
         case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
-        case q: QueryStageExec if throughStages => walk(q.plan)
+        case q: QueryStageExec => walk(q.plan)
         case m: InMemoryTableScanExec
             if seenCaches.put(m.relation, m.relation) == null =>
           walk(m.relation.cachedPlan)
@@ -81,7 +77,7 @@ object PlanBudget {
   }
 
   def count(root: SparkPlan): Counts = {
-    val ns = allNodes(root, throughStages = false)
+    val ns = allNodes(root)
     Counts(
       ns.count { case _: ShuffleExchangeLike => true; case _ => false },
       ns.count { case _: BroadcastExchangeLike => true; case _ => false },
@@ -154,7 +150,7 @@ object PlanBudgetProbe {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val out = if (args.length > 1) args(1) else "docs/PLAN_BUDGET.json"
     val spark = graft.core.Tables.localSession("4").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    graft.core.Tables.setLogLevel(spark, "WARN")
     val counts = PlanBudget.forCatalog(spark, dir)
     Files.writeString(Paths.get(out), PlanBudget.render(dir, counts))
     val tot = counts.map(_._2)

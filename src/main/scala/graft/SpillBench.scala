@@ -34,7 +34,7 @@ object SpillBench {
     val spark = graft.core.Tables.localSession(cpus)
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    graft.core.Tables.setLogLevel(spark, "WARN")
 
     val memSpill = new java.util.concurrent.atomic.AtomicLong
     val diskSpill = new java.util.concurrent.atomic.AtomicLong

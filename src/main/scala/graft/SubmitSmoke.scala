@@ -18,14 +18,14 @@ object SubmitSmoke {
     "func_trigram_match",    // custom codegen expression + trigram rule
     "join_fuzzy_levenshtein",// LevenshteinBoundRule on the join path
     "window_topk_per_group", // TopKPerKey custom operator route
-    "dedup_minhash_lsh")     // LSH banding + persist point
+    "dedup_minhash_lsh")     // LSH banding + pair-enumeration operator
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     // No master/.config here: everything arrives via spark-submit flags —
     // that IS the deployment property under test.
     val spark = SparkSession.builder().getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    graft.core.Tables.setLogLevel(spark, "WARN")
     require(
       spark.conf.get("spark.sql.extensions", "")
         .contains("graft.functions.GraftExtensions"),

@@ -11,7 +11,7 @@ object Verify {
       else _ => true
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.core.Tables.localSession(cpus).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    graft.core.Tables.setLogLevel(spark, "WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => nameFilter(kv._1)).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")

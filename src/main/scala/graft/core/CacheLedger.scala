@@ -4,18 +4,19 @@ import org.apache.spark.sql.DataFrame
 
 /** Registry for persisted intermediates that must OUTLIVE their builder.
   *
-  * Most catalog persists unpersist before returning (FkFilter, the dedup
-  * band tables) because the result is materialized in-scope. A few
-  * builders return a LAZY frame that still references the persisted
-  * relation (pipe_aspect_match's vocab×lexicon score table — the analog
+  * A builder persists a frame only when its own plan reads that frame
+  * more than once (two consumers, or an iteration); a result read once
+  * stays a lazy plan and is never cached (a repeat recomputes it). Some
+  * persists unpersist before returning (FkFilter) because the result is
+  * materialized in-scope. Others sit under the LAZY frame the builder
+  * returns (pipe_aspect_match's vocab×lexicon score table — the analog
   * of the reference's `aspect_match` temp table), so the builder cannot
   * unpersist; left alone those accumulate for the life of the session.
   * Builders `track` such frames here; catalog/gate drivers (Verify,
   * Bench, BenchColdSweep, PlanBudgetProbe, Explain and the test
   * gate's CatalogSweep) call [[release]] after materializing each
-  * query's result. Sizes are vocab-bounded KBs, so releasing is hygiene,
-  * not memory pressure — a long-lived service embedding the catalog
-  * should do the same.
+  * query's result. A long-lived service embedding the catalog should do
+  * the same.
   */
 object CacheLedger {
   private val live = scala.collection.mutable.ArrayBuffer.empty[DataFrame]

@@ -28,6 +28,19 @@ object Tables {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
 
+  /** A main's log level: `level` at the root, and Spark's "No Partition
+    * Defined for Window operation!" WARN held back as in the test log
+    * config — every global window the catalog executes is on
+    * UnpartitionedWindowSpec's allowlist of proven-bounded frames. Call
+    * it once the context exists: Spark loads its default log4j2 profile
+    * when the context starts, which would drop the logger level. */
+  def setLogLevel(spark: SparkSession, level: String): Unit = {
+    spark.sparkContext.setLogLevel(level)
+    org.apache.logging.log4j.core.config.Configurator.setLevel(
+      "org.apache.spark.sql.execution.window.WindowExec",
+      org.apache.logging.log4j.Level.ERROR)
+  }
+
   /** Parquet scan with column pruning / predicate pushdown left to Catalyst.
     * All timestamp columns are normalized via [[normalizeNtz]] so downstream
     * operators see exactly one timestamp type regardless of how the fixture

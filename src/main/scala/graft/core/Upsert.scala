@@ -1,6 +1,6 @@
 package graft.core
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The reference's two sink semantics (SURVEY.md §2.2), Spark-native.
@@ -103,45 +103,27 @@ object Upsert {
     val merged = merge(existing, incoming, pk)
 
     // Stage the merged partitions to a sibling directory, then swap each
-    // touched partition dir into the live table (live -> .bak, staged ->
-    // live, delete .bak) — the same durability protocol as swapIn, applied
-    // per partition. The live table is never written in place, so a driver
-    // crash at any point leaves every partition either untouched, fully
-    // new, or recoverable from its .bak sibling; untouched partitions are
-    // never at risk.
-    val suffix = java.util.UUID.randomUUID().toString
-    val staged = new Path(tablePath + ".staged-" + suffix)
-    try merged.write.partitionBy(partCols: _*).parquet(staged.toString)
-    catch {
-      case e: Throwable =>
-        if (fs.exists(staged)) fs.delete(staged, true)
-        throw e
-    }
-    // The staged dirs (not the collected values) are the source of truth
-    // for which partition paths to swap — Spark's value-to-path escaping
-    // stays internal to Spark.
-    val rels = partitionDirs(fs, staged, partCols.length)
-    try {
-      rels.foreach { rel =>
-        val live = new Path(tablePath + "/" + rel)
-        val from = new Path(staged + "/" + rel)
-        val bak  = new Path(tablePath + "/" + rel + ".bak-" + suffix)
-        fs.mkdirs(live.getParent)
-        val hadOld = fs.exists(live)
-        if (hadOld && !fs.rename(live, bak))
-          throw new java.io.IOException(s"swap failed moving live aside: $live")
-        if (!fs.rename(from, live)) {
-          if (hadOld) fs.rename(bak, live)
-          throw new java.io.IOException(s"swap failed: $from -> $live")
+    // touched partition dir into the live table with the same protocol
+    // as the whole-table swap, applied per partition. The live table is
+    // never written in place, so a driver crash at any point leaves every
+    // partition either untouched, fully new, or recoverable from its .bak
+    // sibling; untouched partitions are never at risk.
+    staged(fs, tablePath, merged.write.partitionBy(partCols: _*).parquet(_)) {
+      (dir, suffix) =>
+        // The staged dirs (not the collected values) are the source of
+        // truth for which partition paths to swap — Spark's value-to-path
+        // escaping stays internal to Spark.
+        partitionDirs(fs, dir, partCols.length).foreach { rel =>
+          val live = new Path(tablePath + "/" + rel)
+          fs.mkdirs(live.getParent)
+          swapDir(fs, new Path(dir + "/" + rel), live, suffix)
         }
-        if (hadOld) fs.delete(bak, true)
-      }
-    } finally fs.delete(staged, true)
+    }
   }
 
   /** Relative `c1=v1/c2=v2/...` paths of the leaf partition dirs `depth`
     * levels under `root`. */
-  private def partitionDirs(fs: org.apache.hadoop.fs.FileSystem, root: Path,
+  private def partitionDirs(fs: FileSystem, root: Path,
       depth: Int): Seq[String] = {
     def walk(p: Path, d: Int): Seq[String] =
       if (d == 0) Seq("")
@@ -167,33 +149,41 @@ object Upsert {
     spark.read.parquet(tablePath).count()
   }
 
-  /** Write `df` to a staging dir, then old → .bak, staged → live,
-    * delete .bak. Readers see the old table until the instant of the
-    * staged→live rename; the old data survives (as .bak) until the new
-    * table is in place. Stage/bak leftovers are cleaned on failure. */
+  /** Write `df` to a staging dir and swap it in for the whole table. */
   private def swapIn(spark: SparkSession, tablePath: String,
       df: DataFrame): Unit = {
-    val path = new Path(tablePath)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = new Path(tablePath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    staged(fs, tablePath, df.write.mode("overwrite").parquet(_)) {
+      (dir, suffix) => swapDir(fs, dir, new Path(tablePath), suffix)
+    }
+  }
+
+  /** Run `write` into a fresh sibling `<tablePath>.staged-<uuid>`, then
+    * `swap(stagedDir, uuid)`. The staging dir is gone afterwards whether
+    * the write failed, the swap failed, or both succeeded. */
+  private def staged(fs: FileSystem, tablePath: String, write: String => Unit)
+      (swap: (Path, String) => Unit): Unit = {
     val suffix = java.util.UUID.randomUUID().toString
-    val staged = new Path(tablePath + ".staged-" + suffix)
-    try df.write.mode("overwrite").parquet(staged.toString)
-    catch {
-      case e: Throwable =>
-        if (fs.exists(staged)) fs.delete(staged, true)
-        throw e
-    }
-    val bak = new Path(tablePath + ".bak-" + suffix)
-    val hadOld = fs.exists(path)
-    if (hadOld && !fs.rename(path, bak)) {
-      fs.delete(staged, true)
-      throw new java.io.IOException(s"swap failed moving live aside: $path -> $bak")
-    }
-    if (!fs.rename(staged, path)) {
-      // Restore the original table before surfacing the error.
-      if (hadOld) fs.rename(bak, path)
-      fs.delete(staged, true)
-      throw new java.io.IOException(s"swap failed: $staged -> $path")
+    val dir = new Path(tablePath + ".staged-" + suffix)
+    try { write(dir.toString); swap(dir, suffix) }
+    finally fs.delete(dir, true)
+  }
+
+  /** The one staged swap: live → `.bak-<suffix>`, `from` → live, delete
+    * the `.bak`. Readers see the old data until the instant of the
+    * second rename, and the old data survives (as `.bak`) until the new
+    * data is in place; a failed rename restores the original before the
+    * error surfaces. */
+  private def swapDir(fs: FileSystem, from: Path, live: Path,
+      suffix: String): Unit = {
+    val bak = new Path(live.toString + ".bak-" + suffix)
+    val hadOld = fs.exists(live)
+    if (hadOld && !fs.rename(live, bak))
+      throw new java.io.IOException(s"swap failed moving live aside: $live -> $bak")
+    if (!fs.rename(from, live)) {
+      if (hadOld) fs.rename(bak, live)
+      throw new java.io.IOException(s"swap failed: $from -> $live")
     }
     if (hadOld) fs.delete(bak, true)
   }

@@ -1,9 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 import graft.functions.{JaroGuardedCmp, JaroWinklerSim}
 
@@ -11,42 +8,26 @@ import graft.functions.{JaroGuardedCmp, JaroWinklerSim}
   * O(1) length bound before the O(|a|·|b|) matching window runs —
   * completing the fuzzy-kernel bound-rule family next to
   * [[LevenshteinBoundRule]] (banded DP) and [[TrigramBoundRule]]
-  * (pg_trgm GIN-prune analog).
+  * (pg_trgm GIN-prune analog). [[SimilarityBoundRule]] has the four
+  * rewritten shapes:
   *
   *   jaro_winkler(a,b) >= t  →  jaro_winkler_ge_bounded(a, b, t)  (t > 0)
   *   jaro_winkler(a,b) >  t  →  jaro_winkler_gt_bounded(a, b, t)  (t >= 0)
   *
-  * (mirrored literal-on-left forms included). The guard is NECESSARY
-  * for the threshold (soundness derivation on [[JaroGuardedCmp]]), so
-  * results and null semantics are bit-identical; only the per-pair
-  * cost of non-candidates drops. t <= 0 for `>=` (always true on
-  * non-null pairs) is left alone. The fused target contains no bare
-  * `jaro_winkler` comparison, so the fixpoint cannot re-match it.
-  * Registered by [[graft.functions.GraftFunctions.register]] and
+  * The guard is NECESSARY for the threshold (soundness derivation on
+  * [[JaroGuardedCmp]]), so results and null semantics are bit-identical;
+  * only the per-pair cost of non-candidates drops. Registered by
+  * [[graft.functions.GraftFunctions.register]] and
   * `graft.functions.GraftExtensions`.
   */
-object JaroWinklerBoundRule extends Rule[LogicalPlan] {
+object JaroWinklerBoundRule extends SimilarityBoundRule {
 
-  private object Threshold {
-    def unapply(e: Expression): Option[Double] = e match {
-      case Literal(d: Double, DoubleType) => Some(d)
-      case Literal(f: Float, FloatType) => Some(f.toDouble)
-      case Literal(d: Decimal, _: DecimalType) => Some(d.toDouble)
-      case Literal(i: Int, IntegerType) => Some(i.toDouble)
-      case Literal(l: Long, LongType) => Some(l.toDouble)
+  protected def args(e: Expression): Option[(Expression, Expression)] =
+    e match {
+      case JaroWinklerSim(a, b) => Some((a, b))
       case _ => None
     }
-  }
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
-      case GreaterThanOrEqual(JaroWinklerSim(a, b), Threshold(t))
-          if t > 0 => JaroGuardedCmp(a, b, t, strict = false)
-      case LessThanOrEqual(Threshold(t), JaroWinklerSim(a, b))
-          if t > 0 => JaroGuardedCmp(a, b, t, strict = false)
-      case GreaterThan(JaroWinklerSim(a, b), Threshold(t))
-          if t >= 0 => JaroGuardedCmp(a, b, t, strict = true)
-      case LessThan(Threshold(t), JaroWinklerSim(a, b))
-          if t >= 0 => JaroGuardedCmp(a, b, t, strict = true)
-    }
+  protected def guarded(a: Expression, b: Expression, t: Double,
+      strict: Boolean): Expression = JaroGuardedCmp(a, b, t, strict)
 }

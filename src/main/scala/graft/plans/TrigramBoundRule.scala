@@ -1,9 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
-import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.catalyst.expressions.Expression
 
 import graft.functions.{TrigramGuardedCmp, TrigramSimilarity}
 
@@ -17,49 +14,29 @@ import graft.functions.{TrigramGuardedCmp, TrigramSimilarity}
   * ever runs. Spark has no index, but a theta-join/filter carrying
   * `trigram_sim(a, b) >= t` re-pays the full kernel (two hash-set builds
   * + intersection, per pair). This rule rewrites the comparison into the
-  * fused [[TrigramGuardedCmp]]:
+  * fused [[TrigramGuardedCmp]] ([[SimilarityBoundRule]] has the four
+  * rewritten shapes):
   *
   *   trigram_sim(a,b) >= t   →  trigram_sim_ge_bounded(a, b, t)   (t > 0)
   *   trigram_sim(a,b) >  t   →  trigram_sim_gt_bounded(a, b, t)   (t >= 0)
   *
-  * (mirrored literal-on-left forms included), whose allocation-free
-  * O(len) guard is a NECESSARY condition for the threshold (see the
-  * soundness note on [[TrigramGuardedCmp]]) — results and null
-  * semantics are bit-identical; only the per-pair cost on non-matching
-  * pairs drops. t <= 0 for `>=` (always reachable) is left alone.
+  * whose allocation-free O(len) guard is a NECESSARY condition for the
+  * threshold (see the soundness note on [[TrigramGuardedCmp]]) — results
+  * and null semantics are bit-identical; only the per-pair cost on
+  * non-matching pairs drops.
   *
-  * The rewrite target contains no bare `trigram_sim` comparison, so the
-  * optimizer's fixpoint batch cannot re-match what this rule produced.
   * Registered alongside [[LevenshteinBoundRule]] by
   * [[graft.functions.GraftFunctions.register]] and
   * `graft.functions.GraftExtensions`.
   */
-object TrigramBoundRule extends Rule[LogicalPlan] {
+object TrigramBoundRule extends SimilarityBoundRule {
 
-  /** Numeric comparison literal in any of the shapes type-coercion /
-    * constant-folding leaves behind. */
-  private object Threshold {
-    def unapply(e: Expression): Option[Double] = e match {
-      case Literal(d: Double, DoubleType) => Some(d)
-      case Literal(f: Float, FloatType) => Some(f.toDouble)
-      case Literal(d: Decimal, _: DecimalType) => Some(d.toDouble)
-      case Literal(i: Int, IntegerType) => Some(i.toDouble)
-      case Literal(l: Long, LongType) => Some(l.toDouble)
+  protected def args(e: Expression): Option[(Expression, Expression)] =
+    e match {
+      case TrigramSimilarity(a, b) => Some((a, b))
       case _ => None
     }
-  }
 
-  override def apply(plan: LogicalPlan): LogicalPlan =
-    plan.transformAllExpressions {
-      // trigram_sim(a,b) >= t  /  t <= trigram_sim(a,b)
-      case GreaterThanOrEqual(TrigramSimilarity(a, b), Threshold(t))
-          if t > 0 => TrigramGuardedCmp(a, b, t, strict = false)
-      case LessThanOrEqual(Threshold(t), TrigramSimilarity(a, b))
-          if t > 0 => TrigramGuardedCmp(a, b, t, strict = false)
-      // trigram_sim(a,b) > t  /  t < trigram_sim(a,b)
-      case GreaterThan(TrigramSimilarity(a, b), Threshold(t))
-          if t >= 0 => TrigramGuardedCmp(a, b, t, strict = true)
-      case LessThan(Threshold(t), TrigramSimilarity(a, b))
-          if t >= 0 => TrigramGuardedCmp(a, b, t, strict = true)
-    }
+  protected def guarded(a: Expression, b: Expression, t: Double,
+      strict: Boolean): Expression = TrigramGuardedCmp(a, b, t, strict)
 }

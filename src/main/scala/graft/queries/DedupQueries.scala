@@ -35,19 +35,9 @@ object DedupQueries extends QueryBase {
     * twice); per-bucket probe cap 32 bounds the quadratic term at any
     * corpus size.
     *
-    * Each call rebuilds the PLAN, but storage is shared: Spark's
-    * CacheManager registers cache entries by canonicalized plan, so the
-    * identical `persist()` from a second consumer (or a bench repeat)
-    * attaches to the existing entry instead of stacking a copy, and its
-    * `count()` materialization is served from that cache. No
-    * driver-side memo is kept on purpose — a memo map would pin dead
-    * sessions and run multi-second Spark jobs inside a map lock; the
-    * CacheManager already provides the sharing with neither hazard.
-    * (Staleness is the same either way: a cached entry keeps serving the
-    * materialized pairs if the dir's parquet is rewritten mid-session —
-    * re-mint fixtures into a fresh dir or clearCache() first.)
-    * (Cross-query timing consequence: whichever dedup query touches the
-    * pair set first pays the build — documented in the verify skill.)
+    * Returns the lazy plan: each of its callers reads the pairs once
+    * (the clustering queries through [[graft.ml.ConnectedComponents]],
+    * which checkpoints its edges itself), so nothing is cached here.
     */
   private def embeddingPairs(s: SparkSession, dir: String): DataFrame = {
     val e = th(s, dir, "embeddings")
@@ -69,21 +59,12 @@ object DedupQueries extends QueryBase {
         Seq("bd", "bkey"), Seq(("vec_id", true)), Seq("vec_id"), 32)
       .select(col("x_vec_id").as("left_id"), col("y_vec_id").as("right_id"))
       .distinct()
-    val out = cand
+    cand
       .join(v.select(col("vec_id").as("lid"), col("vv").as("va")), col("left_id") === col("lid"))
       .join(v.select(col("vec_id").as("rid"), col("vv").as("vb")), col("right_id") === col("rid"))
       .withColumn("cosine", expr("cosine_ff(va, vb)"))
       .filter(col("cosine") >= 0.4)
       .select(col("left_id"), col("right_id"), col("cosine"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    // Tracked for deferred cleanup: the lazy result references this
-    // persist, so the builder can't unpersist in-scope. Verify releases
-    // it per query (a later embedding-dedup query simply re-persists via
-    // its own builder call); Bench deliberately does NOT release, so
-    // warm repeats and the documented cross-query cache sharing keep
-    // working there.
-    graft.core.CacheLedger.track(out)
   }
 
   /** Distinct word-3-shingles of a projected token column (see
@@ -117,8 +98,8 @@ object DedupQueries extends QueryBase {
 
   /** The `dedup_minhash_lsh` pipeline over documents `(doc_id, text)`:
     * shingles, band keys, capped bucket pairs and the exact-Jaccard
-    * verify, persisted, counted and tracked. Also run by
-    * `dedup_minhash_slice` on its content slice. */
+    * verify, as one lazy plan. Also run by `dedup_minhash_slice` on its
+    * content slice. */
   private[queries] def minhashPairs(d: DataFrame): DataFrame = {
     val shingled = d.select(col("doc_id"), CurationDefs.toks.as("tk"))
       .select(col("doc_id"), shingles3(col("tk")).as("sh"))
@@ -135,7 +116,7 @@ object DedupQueries extends QueryBase {
         Seq("bd", "bkey"), Seq(("doc_id", true)), Seq("doc_id"), 32)
       .select(col("x_doc_id").as("left_id"), col("y_doc_id").as("right_id"))
       .distinct()
-    val out = cand
+    cand
       .join(shingled.select(col("doc_id").as("lid"), col("sh").as("sa")),
         col("left_id") === col("lid"))
       .join(shingled.select(col("doc_id").as("rid"), col("sh").as("sb")),
@@ -144,13 +125,6 @@ object DedupQueries extends QueryBase {
         round(expr("jaccard_sim(sa, sb)"), 6).as("jaccard"))
       .filter(col("jaccard") >= 0.5)
       .orderBy("left_id", "right_id")
-      // The verified-pair result is tiny (pairs that LSH-collided AND
-      // pass Jaccard ≥ 0.5); cache it eagerly so warm repeats serve
-      // from the pair set instead of re-running the pipeline.
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    // tracked: Verify releases after the result is written (r10)
-    graft.core.CacheLedger.track(out)
   }
 
   /** Corpus-wide SEGMENT-level dedup with document rewrite — the C4 /
@@ -1137,9 +1111,8 @@ object DedupQueries extends QueryBase {
     // curation actually uses — keep the highest-quality member of each
     // near-dup cluster (here: longest document, ties to lowest id), not
     // the arbitrary min-id. Same pair graph and components as
-    // dedup_semantic_cluster (shared via the CacheManager persist on the
-    // pair set — the CC labels join the quality table once, one hash
-    // shuffle on id); the argmax is a per-cluster window over
+    // dedup_semantic_cluster (the CC labels join the quality table once,
+    // one hash shuffle on id); the argmax is a per-cluster window over
     // cluster-sized partitions.
     Q(
       "dedup_keep_best",
@@ -1355,8 +1328,8 @@ object DedupQueries extends QueryBase {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
       val bloom = hist.stat.bloomFilter("fp", 100000, 0.01)
       // Materialize the batch cache in ONE pass before its two union
-      // branches race to build it concurrently (same minhash precedent:
-      // the eager count is the persist's build action).
+      // branches race to build it concurrently (the eager count is the
+      // persist's build action).
       batch.count()
       val bits = graft.functions.BloomOps.toBytes(bloom)
       val probe = call_function("bloom_contains", col("fp"), lit(bits))

@@ -12,6 +12,7 @@ class BenchBaselineSpec extends AnyFunSuite {
 
   private def write(body: String): String = {
     val f = Files.createTempFile("baseline", ".json")
+    f.toFile.deleteOnExit()
     Files.writeString(f, body)
     f.toString
   }

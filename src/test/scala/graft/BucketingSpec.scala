@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 /** Bucketing = the co-located-join scale pattern (SURVEY §4): writing
   * both sides bucketed on the join key lets a repeated fact-fact join run
   * with ZERO shuffle exchanges — at 100 TB this converts every downstream
@@ -13,7 +11,7 @@ class BucketingSpec extends SparkSpec {
 
   test("bucketed fact-fact join plans without a shuffle exchange") {
     val dir = "/root/testdata/sf0.001"
-    val wh = Files.createTempDirectory("graft_bucket").toString
+    val wh = scratchDir("graft_bucket")
     val prevThreshold = spark.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
     try {
       // Force the shuffle-join shape (broadcast would mask the point).

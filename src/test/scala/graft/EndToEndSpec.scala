@@ -19,7 +19,7 @@ class EndToEndSpec extends SparkSpec {
   import spark.implicits._
 
   test("bronze → upsert → incremental batch → silver view → invariants") {
-    val dir = Files.createTempDirectory("graft-e2e").toString
+    val dir = scratchDir("graft-e2e")
 
     // ---- bronze: normalize a raw order report and upsert it (K1).
     val rawOrders1 = Seq(
@@ -151,7 +151,7 @@ class EndToEndSpec extends SparkSpec {
     // reference's HTML fixtures, through the K1 upsert sink.
     val refData = java.nio.file.Paths.get("/root/reference/tests/test_data/gomus")
     assume(java.nio.file.Files.isDirectory(refData))
-    val dir = Files.createTempDirectory("graft-e2e-quotas").toString
+    val dir = scratchDir("graft-e2e-quotas")
     val qDir = Files.createDirectory(java.nio.file.Paths.get(dir, "qpages"))
     val cDir = Files.createDirectory(java.nio.file.Paths.get(dir, "cpages"))
     Seq("quotas_1.html", "quotas_34.html").foreach(f =>

@@ -11,7 +11,7 @@ import graft.core.Tables
 class JsoncSpec extends SparkSpec {
 
   test("readJsonc parses commented JSON with an enforced schema") {
-    val dir = Files.createTempDirectory("graft-jsonc")
+    val dir = java.nio.file.Paths.get(scratchDir("graft-jsonc"))
     val f = dir.resolve("facts.jsonc")
     Files.writeString(f,
       """{

@@ -56,6 +56,22 @@ class PlanBudgetSpec extends SparkSpec {
         " and justify in the commit:\n" + regressions.mkString("\n"))
   }
 
+  test("the budget counts the exchanges inside a materialized cache") {
+    import org.apache.spark.sql.functions.col
+    val s = PlanBudget.session(spark)
+    val cached = s.range(0, 1000).repartition(7)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    try {
+      cached.count()
+      val agg = cached.groupBy((col("id") % 3).as("k")).count()
+      // the aggregate's own exchange, plus the repartition's, which sits
+      // inside a query stage of the materialized cache's final plan
+      val c = PlanBudget.count(agg.queryExecution.executedPlan)
+      assert(c.sh === 2, s"counted ${c.json}; the cached repartition's " +
+        "shuffle is invisible to the budget")
+    } finally cached.unpersist(blocking = true)
+  }
+
   test("zero cartesian products anywhere in the catalog") {
     val offenders = now.collect { case (n, c) if c.cp > 0 => s"$n(${c.cp})" }
     assert(offenders.isEmpty,

@@ -132,7 +132,7 @@ class Round12OpsSpec extends SparkSpec {
   test("pipe_pii_redact masks only checksum-valid candidates") {
     import spark.implicits._
     // run the catalog builder against a minimal parquet fixture dir
-    val dir = java.nio.file.Files.createTempDirectory("pii").toString
+    val dir = scratchDir("pii")
     Seq((1L, "Customer#000000001", "BUILDING"),
         (3L, "Customer#000000003", "AUTO"),
         (5L, "Customer#000000005", "STEEL"))
@@ -162,7 +162,7 @@ class Round12OpsSpec extends SparkSpec {
   test("text_boilerplate_strip: nav/footer classified by link density, " +
       "promo by stopword density, content kept in order") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("boiler").toString
+    val dir = scratchDir("boiler")
     // first half has a stopword ('the'), second half has none →
     // content + lowstop respectively
     Seq((7L, "the quick brown fox jumps high over lazy dogs daily"))

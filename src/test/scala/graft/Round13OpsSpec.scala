@@ -84,7 +84,7 @@ class Round13OpsSpec extends SparkSpec {
   test("text_unicode_fix: mojibake chain, zero-width strip, NBSP and " +
       "control removal, audit counts") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("ufix").toString
+    val dir = scratchDir("ufix")
     // doc_id 0,1,2,3 pick the four corruption plants in order
     Seq((0L, "plain a"), (1L, "plain b"), (2L, "plain c"), (3L, "plain d"))
       .toDF("doc_id", "text")
@@ -113,7 +113,7 @@ class Round13OpsSpec extends SparkSpec {
   test("src_html_outlinks: href-less anchors skipped, relative links " +
       "resolve to the page host, entities decode, utm params dropped") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("olink").toString
+    val dir = scratchDir("olink")
     // one page: doc_id 0 -> src_host news.example.com (hosts[(0/5)%5])
     Seq((0L, "x")).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")

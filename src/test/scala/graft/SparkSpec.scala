@@ -18,6 +18,15 @@ object SparkSpec {
 trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSpec.session
 
+  /** An empty directory `name` under the run's scratch root
+    * ([[graft.sources.Sources.scratch]]); Spark deletes the root when the
+    * context stops, so a suite leaves nothing behind in the temp dir. */
+  protected def scratchDir(name: String): String = {
+    val d = graft.sources.Sources.scratch(spark, name)
+    new java.io.File(d).mkdirs()
+    d
+  }
+
   override def afterAll(): Unit = {
     // Session is shared process-wide across suites; do not stop it here.
     // Release what the suite's query builds left tracked, as the catalog

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import graft.streaming.Incremental
 
@@ -14,7 +13,7 @@ class StreamingSpec extends SparkSpec {
 
   test("availableNow windowed rollup matches batch aggregation") {
     val batchEvents = graft.core.Tables.events(spark, sfDir)
-    val tmp = Files.createTempDirectory("graft-stream").toString
+    val tmp = scratchDir("graft-stream")
 
     // Stage the (nanos-converted) events as a plain parquet stream source.
     batchEvents.write.mode("overwrite").parquet(s"$tmp/src")
@@ -57,7 +56,7 @@ class StreamingSpec extends SparkSpec {
 
   test("availableNow + foreachBatch upsert: the FillDbHourly merge cadence") {
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-stream-upsert").toString
+    val tmp = scratchDir("graft-stream-upsert")
     val (srcDir, table, ckpt) = (s"$tmp/src", s"$tmp/table", s"$tmp/ckpt")
     val schema = Seq((0L, "x")).toDF("id", "v").schema
 
@@ -90,7 +89,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming exact dedup keeps one row per fingerprint (bounded state)") {
-    val tmp = Files.createTempDirectory("graft-stream-dedup").toString
+    val tmp = scratchDir("graft-stream-dedup")
     // Documents wrapped as an arriving stream with planted duplicate
     // fingerprints: doc_id % 100 collides 5x at sf0.001 (500 docs).
     val docs = graft.core.Tables.load(spark, sfDir, "documents")
@@ -116,7 +115,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming image-phash dedup admits one row per perceptual hash") {
-    val tmp = Files.createTempDirectory("graft-stream-phash").toString
+    val tmp = scratchDir("graft-stream-phash")
     val mm = graft.multimodal.Multimodal
     // Planted exact re-uploads: two mints from the SAME seed (identical
     // PNG bytes → identical dHash) under different media ids.
@@ -149,7 +148,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming near-dup gate flags radius-3 re-uploads at admission") {
-    val tmp = Files.createTempDirectory("graft-stream-neardup").toString
+    val tmp = scratchDir("graft-stream-neardup")
     val mm = graft.multimodal.Multimodal
     // Originals arrive first (arrival ordered by media_id), then the
     // PERTURBED re-uploads: same mint seed with the red channel bumped
@@ -208,7 +207,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming text near-dup gate flags MinHash band collisions at " +
       "admission, with batch-twin parity and bounded state") {
-    val tmp = Files.createTempDirectory("graft-stream-textdup").toString
+    val tmp = scratchDir("graft-stream-textdup")
     // Originals arrive first, then PERTURBED re-posts: one token appended
     // — NOT an exact fingerprint match (dedupStream can't see it), but
     // Jaccard ≈ (n-2)/(n-1) on word-3-shingles, so the MinHash band
@@ -265,7 +264,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming curation intake equals the batch transform row-for-row") {
-    val tmp = Files.createTempDirectory("graft-stream-curate").toString
+    val tmp = scratchDir("graft-stream-curate")
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
     docs.write.mode("overwrite").parquet(s"$tmp/src")
     val src = Incremental.readStream(spark, s"$tmp/src",
@@ -285,7 +284,7 @@ class StreamingSpec extends SparkSpec {
 
   test("session_window gap sessionization runs in streaming mode") {
     val batchEvents = graft.core.Tables.events(spark, sfDir)
-    val tmp = Files.createTempDirectory("graft-stream-sess").toString
+    val tmp = scratchDir("graft-stream-sess")
     batchEvents.write.mode("overwrite").parquet(s"$tmp/src")
     val src = Incremental.readStream(spark, s"$tmp/src",
       spark.read.parquet(s"$tmp/src").schema)
@@ -300,7 +299,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream-stream interval join equals the batch join row-for-row") {
-    val tmp = Files.createTempDirectory("graft-stream-ssj").toString
+    val tmp = scratchDir("graft-stream-ssj")
     val ev = graft.core.Tables.events(spark, sfDir)
     ev.filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
@@ -334,7 +333,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming funnel stages equal the batch funnel per user") {
-    val tmp = Files.createTempDirectory("graft-stream-funnel").toString
+    val tmp = scratchDir("graft-stream-funnel")
     val ev = graft.core.Tables.events(spark, sfDir)
     // One file => one micro-batch => per-user events fold in event-time
     // order, the contract under which streaming equals batch exactly.
@@ -378,7 +377,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("stream-static enrichment equals the batch join, and sees dim refreshes") {
-    val tmp = Files.createTempDirectory("graft-stream-enrich").toString
+    val tmp = scratchDir("graft-stream-enrich")
     val ev = graft.core.Tables.events(spark, sfDir)
     ev.select("event_id", "user_id", "value")
       .write.mode("overwrite").parquet(s"$tmp/facts")
@@ -420,7 +419,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming heavy hitters: exact parity above capacity, theorems below") {
     val batchEvents = graft.core.Tables.events(spark, sfDir)
-    val tmp = Files.createTempDirectory("graft-stream-hh").toString
+    val tmp = scratchDir("graft-stream-hh")
     batchEvents
       .select(col("ts"), (col("user_id") % 2).cast("string").as("grp"),
         col("event_type").as("w"))
@@ -483,7 +482,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("streaming Viterbi intent gate equals the batch DP across micro-batches") {
-    val tmp = Files.createTempDirectory("graft-stream-intent").toString
+    val tmp = scratchDir("graft-stream-intent")
     val ev = graft.core.Tables.events(spark, sfDir)
       .select("event_id", "user_id", "ts", "event_type")
     // Two files split at the median event time, processed one per
@@ -524,7 +523,7 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("left-outer stream-stream attribution: matches exact, nulls watermark-closed") {
-    val tmp = Files.createTempDirectory("graft-stream-ssjo").toString
+    val tmp = scratchDir("graft-stream-ssjo")
     val ev = graft.core.Tables.events(spark, sfDir)
     ev.filter(col("event_type") === "purchase")
       .select(col("user_id").as("p_user"), col("ts").as("p_ts"),
@@ -581,7 +580,7 @@ class StreamingSpec extends SparkSpec {
   test("aspect token matching runs stateless in-stream with catalog parity") {
     val docs = graft.core.Tables.load(spark, sfDir, "documents")
       .select(col("source"), col("doc_id").as("post_id"), col("text"))
-    val tmp = Files.createTempDirectory("graft-stream-aspect").toString
+    val tmp = scratchDir("graft-stream-aspect")
     docs.write.mode("overwrite").parquet(s"$tmp/src")
     val src = Incremental.readStream(spark, s"$tmp/src",
       spark.read.parquet(s"$tmp/src").schema)
@@ -619,7 +618,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-evict-text").toString
+    val tmp = scratchDir("graft-evict-text")
     val input = MemoryStream[(Long, java.sql.Timestamp, String)]
     val docs = input.toDF.toDF("doc_id", "arrival", "text")
     val q = Incremental.textNearDupGateStream(docs, "10 minutes")
@@ -660,7 +659,7 @@ class StreamingSpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
     import spark.implicits._
-    val tmp = Files.createTempDirectory("graft-evict-phash").toString
+    val tmp = scratchDir("graft-evict-phash")
     val mm = graft.multimodal.Multimodal
     val nBatches = 5
     val bSize = 20

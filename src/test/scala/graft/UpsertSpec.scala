@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import graft.core.Upsert
 
 class UpsertSpec extends SparkSpec {
@@ -23,7 +22,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("upsertWrite: creates, merges, swaps atomically; replaceWrite overwrites") {
-    val dir = Files.createTempDirectory("graft-upsert").toString
+    val dir = scratchDir("graft-upsert")
     val table = s"$dir/t"
     Upsert.upsertWrite(spark, table, Seq((1, "a"), (2, "b")).toDF("id", "v"), Seq("id"))
     Upsert.upsertWrite(spark, table, Seq((2, "B2"), (3, "c")).toDF("id", "v"), Seq("id"))
@@ -36,7 +35,7 @@ class UpsertSpec extends SparkSpec {
 
   test("upsertWritePartitioned: merges only touched partitions, " +
       "untouched partition files are not rewritten") {
-    val dir = Files.createTempDirectory("graft-upsert-part").toString
+    val dir = scratchDir("graft-upsert-part")
     val table = s"$dir/t"
     val base = Seq(
       ("2020-01-01", 1, "a"), ("2020-01-01", 2, "b"),
@@ -77,7 +76,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("failed stage write leaves the live table intact, no stray dirs") {
-    val dir = Files.createTempDirectory("graft-upsert-crash").toString
+    val dir = scratchDir("graft-upsert-crash")
     val table = s"$dir/t"
     Upsert.upsertWrite(spark, table,
       Seq((1, "a"), (2, "b")).toDF("id", "v"), Seq("id"))
@@ -99,7 +98,7 @@ class UpsertSpec extends SparkSpec {
 
   test("upsertWritePartitioned: failed stage write leaves live table and " +
       "all partitions intact, no stray dirs") {
-    val dir = Files.createTempDirectory("graft-upsert-part-crash").toString
+    val dir = scratchDir("graft-upsert-part-crash")
     val table = s"$dir/t"
     Upsert.upsertWritePartitioned(spark, table,
       Seq(("a", 1, "x"), ("b", 2, "y")).toDF("p", "id", "v"),
@@ -123,7 +122,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("upsertWritePartitioned: multi-level partitioning swaps leaf dirs") {
-    val dir = Files.createTempDirectory("graft-upsert-part2").toString
+    val dir = scratchDir("graft-upsert-part2")
     val table = s"$dir/t"
     val base = Seq(
       ("2020", "jan", 1, "a"), ("2020", "feb", 2, "b"), ("2021", "jan", 3, "c"))
@@ -152,7 +151,7 @@ class UpsertSpec extends SparkSpec {
       "reader sees complete partitions only, never a half-written one") {
     // Construct the documented mid-swap window by hand: one touched
     // partition moved aside to .bak, its replacement not yet renamed in.
-    val dir = Files.createTempDirectory("graft-upsert-midswap").toString
+    val dir = scratchDir("graft-upsert-midswap")
     val table = s"$dir/t"
     Upsert.upsertWritePartitioned(spark, table,
       Seq(("a", 1, "x"), ("b", 2, "y")).toDF("p", "id", "v"),
@@ -172,7 +171,7 @@ class UpsertSpec extends SparkSpec {
   }
 
   test("upsertWritePartitioned: existing-side scan is partition-pruned") {
-    val dir = Files.createTempDirectory("graft-upsert-prune").toString
+    val dir = scratchDir("graft-upsert-prune")
     val table = s"$dir/t"
     Upsert.upsertWritePartitioned(spark, table,
       Seq(("a", 1, 10), ("b", 2, 20), ("c", 3, 30)).toDF("p", "id", "v"),

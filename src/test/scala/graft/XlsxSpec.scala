@@ -10,11 +10,7 @@ import graft.sources.Xlsx
   * resolution, and the distributed directory read. */
 class XlsxSpec extends SparkSpec {
 
-  private def tmpDir(): File = {
-    val d = Files.createTempDirectory("graft_xlsx").toFile
-    d.deleteOnExit()
-    d
-  }
+  private def tmpDir(name: String): File = new File(scratchDir(name))
 
   private val rows: Seq[Seq[Any]] = Seq(
     Seq("Datum", "Anzahl", "Preis", "Name", "Aktiv"),
@@ -24,7 +20,7 @@ class XlsxSpec extends SparkSpec {
     Seq(null, null, null, "nur_name", null))
 
   test("roundtrip with shared strings") {
-    val f = new File(tmpDir(), "a.xlsx")
+    val f = new File(tmpDir("graft_xlsx_1"), "a.xlsx")
     Xlsx.write(f, rows, useSharedStrings = true)
     val got = Xlsx.sheetRows(Files.readAllBytes(f.toPath))
     assert(got.length == 4)
@@ -36,7 +32,7 @@ class XlsxSpec extends SparkSpec {
   }
 
   test("roundtrip with inline strings") {
-    val f = new File(tmpDir(), "b.xlsx")
+    val f = new File(tmpDir("graft_xlsx_2"), "b.xlsx")
     Xlsx.write(f, rows, useSharedStrings = false)
     val got = Xlsx.sheetRows(Files.readAllBytes(f.toPath))
     assert(got(1)(3) == "Führung & \"VIP\"")
@@ -44,8 +40,8 @@ class XlsxSpec extends SparkSpec {
   }
 
   test("writer bytes are deterministic") {
-    val f1 = new File(tmpDir(), "c1.xlsx")
-    val f2 = new File(tmpDir(), "c2.xlsx")
+    val f1 = new File(tmpDir("graft_xlsx_3"), "c1.xlsx")
+    val f2 = new File(tmpDir("graft_xlsx_4"), "c2.xlsx")
     Xlsx.write(f1, rows)
     Xlsx.write(f2, rows)
     assert(Files.readAllBytes(f1.toPath).toSeq ==
@@ -114,7 +110,7 @@ class XlsxSpec extends SparkSpec {
   }
 
   test("distributed readSheet over a directory of workbooks") {
-    val d = tmpDir()
+    val d = tmpDir("graft_xlsx_5")
     val header = Seq("Tag", "N", "Offen")
     Xlsx.write(new File(d, "r1.xlsx"),
       header +: Seq(Seq("2024-01-01", 5L, true), Seq("2024-01-02", 7L, false)),
