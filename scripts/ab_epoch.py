@@ -4,29 +4,26 @@
 Usage: ab_epoch.py <committed_old_detail> <oldcode_today_detail> \
                    <newcode_today_detail>
 
-For the queries all three runs share, prints the per-query healed-warm
-ratio medians:
+For the queries all three runs share, prints the per-query warm ratio
+medians:
   - oldcode-today / committed-old  -> the HOST EPOCH alone (same binary)
   - newcode-today / committed-old  -> epoch x code drift
   - newcode-today / oldcode-today  -> code drift alone (same host session)
-Warm = min of runs[1:] (runs[0] is cold).
+Warm is make_baseline.py's rule: min of runs[1:] (runs[0] is cold).
+Failed queries (rows < 0) are left out.
 """
 import sys, json, statistics
+from make_baseline import warm
 
 
-def warm(path):
+def warm_map(path):
     d = json.load(open(path))["detail"]
-    out = {}
-    for name, q in d.items():
-        runs = q.get("runs", [])
-        if q.get("rows", 0) < 0 or not runs:
-            continue
-        out[name] = min(runs[1:]) if len(runs) > 1 else runs[0]
-    return out
+    return {name: warm(q) for name, q in d.items()
+            if q.get("rows", 0) >= 0 and q.get("runs")}
 
 
 def main():
-    old_commit, old_today, new_today = map(warm, sys.argv[1:4])
+    old_commit, old_today, new_today = map(warm_map, sys.argv[1:4])
     common = sorted(set(old_commit) & set(old_today) & set(new_today))
     print(f"common queries: {len(common)}")
 

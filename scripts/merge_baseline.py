@@ -8,9 +8,11 @@ The skill's baseline policy: when only SOME plans changed, merge those
 entries instead of re-ratcheting the whole file from one host epoch
 (a wholesale regen from a hot run loosens every gate; from a calm run
 it tightens unchanged entries the change did not earn). Refuses
-contended/failed source entries, same as make_baseline.py.
+contended/failed source entries and computes warm with make_baseline.py's
+own rules.
 """
 import sys, json
+from make_baseline import warm, dirty
 
 def main():
     detail_path, source, qlist = sys.argv[1], sys.argv[2], sys.argv[3]
@@ -28,20 +30,11 @@ def main():
         e = d.get(q)
         if e is None:
             bad.append(f"{q}: absent from detail"); continue
-        if e.get("contended"):
-            bad.append(f"{q}: contended")
-        if e.get("rows", 0) < 0:
-            bad.append(f"{q}: failed (rows=-1)")
+        bad += dirty(q, e)
     if bad:
         sys.exit("refusing to merge dirty entries:\n  " + "\n  ".join(bad))
     for q in queries:
-        e = d[q]
-        runs = e["runs"]
-        warm = min(runs[1:]) if len(runs) > 1 else runs[0]
-        heal = [h["s"] for h in e.get("heal_runs", []) if h["accepted"]]
-        if heal:
-            warm = min([warm] + heal)
-        base["warm"][q] = round(warm, 3)
+        base["warm"][q] = round(warm(d[q]), 3)
     base["n"] = len(base["warm"])
     base["source"] = base.get("source", "") + f" | merged {len(queries)} entries: {source}"
     with open("docs/BENCH_BASELINE.json", "w") as f:

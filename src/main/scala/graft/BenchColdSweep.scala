@@ -18,14 +18,7 @@ object BenchColdSweep {
     val only = args.lift(2)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // The r12 exponent table attributed three e>1.1 entries to shuffle
-    // spill at the contract's FIXED 32 local partitions; this override
-    // exists to test that attribution with data (r12 verdict item 3) —
-    // a cluster sizes shuffle partitions to the data, the local
-    // contract can't.
-    val shufParts = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
     val spark = graft.core.Tables.localSession(cpus)
-      .config("spark.sql.shuffle.partitions", shufParts)
       .config("spark.sql.adaptive.enabled", "true")
       .getOrCreate()
     graft.core.Tables.setLogLevel(spark, "WARN")

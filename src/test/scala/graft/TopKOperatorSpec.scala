@@ -2,7 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.plans.TopK
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.window.WindowExec
+import graft.plans.{TopK, TopKPerKeyExec}
 
 /** The custom TopKPerKey operator: plan shape (partial exec below the
   * exchange, final above, no Window), result parity with the
@@ -18,16 +21,24 @@ class TopKOperatorSpec extends SparkSpec {
   test("plans as partial + final exec around one exchange, no Window") {
     val df = TopK.perKey(orders, Seq("o_custkey"),
       Seq(("o_totalprice", false), ("o_orderkey", true)), 2)
-    // AdaptiveSparkPlanExec hides its children from collect(), so the
-    // shape is asserted on the rendered plan: final (partial=false)
-    // above the exchange, partial (partial=true) below, no Window.
-    val ps = df.queryExecution.executedPlan.toString
-    val iFinal = ps.indexOf("], 2, false")
-    val iExchange = ps.indexOf("Exchange hashpartitioning(o_custkey")
-    val iPartial = ps.indexOf("], 2, true")
-    assert(iFinal >= 0 && iExchange > iFinal && iPartial > iExchange,
-      s"expected final/exchange/partial TopKPerKey stack in:\n$ps")
-    assert(!ps.contains("Window"), "no window sort should remain")
+    // final (partial=false) above the exchange, partial (partial=true)
+    // below, no Window; allNodes descends through the AQE wrapper.
+    val nodes = PlanBudget.allNodes(df.queryExecution.executedPlan)
+    val finals = nodes.collect { case t: TopKPerKeyExec if !t.partial => t }
+    assert(finals.size == 1, s"expected one final TopKPerKey in: $nodes")
+    val exchanges = PlanBudget.allNodes(finals.head.child)
+      .collect { case e: ShuffleExchangeExec => e }
+    assert(exchanges.size == 1 && (exchanges.head.outputPartitioning match {
+      case h: HashPartitioning =>
+        h.expressions.flatMap(_.references.map(_.name)) == Seq("o_custkey")
+      case _ => false
+    }), s"expected one o_custkey hash exchange below the final: $exchanges")
+    val partials = nodes.collect { case t: TopKPerKeyExec if t.partial => t }
+    assert(partials.size == 1 &&
+      PlanBudget.allNodes(exchanges.head.child).contains(partials.head),
+      s"expected the partial TopKPerKey below the exchange in: $nodes")
+    assert(!nodes.exists(_.isInstanceOf[WindowExec]),
+      "no window sort should remain")
   }
 
   test("matches the row_number formulation exactly") {
